@@ -888,7 +888,7 @@ def main() -> None:
 
     spark.stop()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     canary = canary_block(sf_dir, cpus)
     prev_t, head_t = canary.get("prev", {}), canary.get("head", {})
     ratios = {

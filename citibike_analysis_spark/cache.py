@@ -96,6 +96,13 @@ def reuse(df: DataFrame, env: str = "SPARK_GRAFT_DEDUP_REUSE") -> DataFrame:
     default therefore stays LAZY; on a saturated production cluster the
     redundant branch evaluations cost real resources and the knob is
     the documented remedy.
+
+    Side effect on multi-process masters: there the default is eager
+    (:func:`_eager_default`), so ``reuse()`` runs a Spark job — the
+    ``count()`` — while the plan is being BUILT. Merely constructing a
+    query that reuses an intermediate (for ``explain()``, plan capture,
+    or a plan never executed) then executes that intermediate's full
+    pipeline. Set ``SPARK_GRAFT_REUSE_EAGER=0`` for plan-only work.
     """
     mode = os.environ.get(env, "persist")
     if mode == "checkpoint":

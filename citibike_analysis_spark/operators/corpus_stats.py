@@ -201,6 +201,13 @@ def encode_documents(
     array_sort(collect_list(struct(pos, id))) — the same
     order-restoring aggregation as dedup_chunks' reassembly. Empty
     documents produce an empty array.
+
+    Contract: ``vocab`` must fit one broadcast. Its (token, token_id)
+    side is always ``F.broadcast``-hinted, so an oversized vocab fails
+    on the driver (out of memory or the broadcast size limit) instead of
+    falling back to a sort-merge join. :func:`build_vocab` output
+    already meets this (its global rank window needs the vocabulary in
+    one task); callers passing any other frame must prune it first.
     """
     from citibike_analysis_spark.partitioning import spread
 

@@ -22,8 +22,31 @@ production plan shape documented in SCALE.md is unchanged.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: Plan-node name fragments that make :func:`spread` refuse a plan. A
+#: node whose name CONTAINS one is wide, so the logical names and the
+#: physical ones printed under a persisted frame's ``InMemoryRelation``
+#: (``SortMergeJoin``, ``HashAggregate``, ...) are both caught. The
+#: Python map/group nodes (r14 ADVICE) also require exchanges at
+#: execution, so they must never fall through to the ``.rdd`` probe
+#: either.
+_WIDE = (
+    "Join", "Aggregate", "Window", "Sort", "Repartition",
+    "Union", "Generate", "Distinct", "GlobalLimit",
+    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+    "MapInPandas", "PythonMapInArrow", "MapInArrow",
+    "FlatMapGroupsWithState", "MapGroups", "CoGroup",
+)
+
+#: The node name at the head of a ``treeString`` line: after the tree
+#: drawing (``+-``, ``:-``, ``:``, spaces) and an optional whole-stage
+#: codegen marker (``*(1) ``). Attribute and expression text — a column
+#: named ``Window_id`` — never sits there.
+_NODE = re.compile(r"^[ :|+-]*(?:\*\(\d+\) )?(\w+)", re.M)
 
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -52,19 +75,7 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
         # composing operators keeps its plan untouched rather than
         # paying a surprise execution here.
         plan_str = df._jdf.queryExecution().optimizedPlan().toString()
-        wide = (
-            "Join", "Aggregate", "Window", "Sort", "Repartition",
-            "Union", "Generate", "Distinct", "GlobalLimit",
-            # Python map/group nodes (r14 ADVICE): these also require
-            # exchanges at execution, so they must never fall through to
-            # the .rdd probe below (which would eagerly materialize
-            # their query stages under AQE). Logical node names as they
-            # print in optimizedPlan().
-            "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
-            "MapInPandas", "PythonMapInArrow", "MapInArrow",
-            "FlatMapGroupsWithState", "MapGroups", "CoGroup",
-        )
-        if any(w in plan_str for w in wide):
+        if any(w in name for name in _NODE.findall(plan_str) for w in _WIDE):
             return df
         current = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 - planning-only failure: keep the plan

@@ -13,6 +13,19 @@ cluster unchanged:
 - Shuffle partitions default to a small number locally; AQE coalesces
   further. On a real cluster this should be ~2-3x total cores — callers
   override via ``extra_conf``.
+- Generated-class cache sized to the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`). The engine re-runs the same plans
+  (the 3-minute collection cron, the continuously maintained
+  ``availability`` fact), and one pass over them touches more distinct
+  whole-stage codegen classes than Spark's default 100-entry LRU holds,
+  so every class was evicted before it came round again: each repeat
+  pass recompiled ~80-120 classes in Janino and the JVM JIT-compiled
+  them anew. ``spark.sql.codegen.cache.maxEntries`` is a STATIC conf —
+  a running session refuses to change it — so it is set only in
+  :func:`get_spark`, never by :func:`tune`. A session created
+  elsewhere (a caller of ``__spark_entry__.py`` that builds its own
+  session, a notebook) keeps Spark's 100 unless it is launched with the
+  same conf.
 """
 
 from __future__ import annotations
@@ -20,6 +33,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Entries in Spark's generated-class cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). At 100, every
+#: timed perfbench pass recompiled 89-112 classes on station_analytics
+#: and 79-122 on corpus_dedup (4-core host); at 1024, 0-9. Each entry
+#: is a loaded class in Metaspace, so the bound stays finite: after the
+#: 146-query sf0.01 sweep, driver Metaspace read 213 MB at 1024 against
+#: 207 MB at 100.
+CODEGEN_CACHE_ENTRIES = 1024
 
 #: Runtime (non-static) confs applied to sessions we create AND safe to
 #: apply to sessions handed to us (e.g. the verify driver's).
@@ -140,6 +162,12 @@ def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent, best-effort).
 
     Used when the caller (test harness, verify driver) owns the session.
+    Only runtime confs can be applied here: static confs are fixed when
+    the owner built the session, so the generated-class cache keeps
+    whatever size that session was launched with — Spark's 100 unless
+    the owner passed ``spark.sql.codegen.cache.maxEntries`` (see
+    :data:`CODEGEN_CACHE_ENTRIES`, set only by :func:`get_spark`).
+
     Also ships the package archive (memoized no-op after the first call):
     an externally-owned session pointed at a multi-process master needs
     it for module-level UDFs to unpickle on executors (r07 finding).
@@ -172,6 +200,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
     )
     for k, v in RUNTIME_CONF.items():
         b = b.config(k, v)

@@ -67,7 +67,7 @@ def main() -> int:
     if unknown:
         ap.error(f"unknown queries: {unknown}")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     code = _CELL % {
         "repo": REPO,
         "cpus": cpus,

@@ -24,7 +24,7 @@ def main() -> int:
     from citibike_analysis_spark.plans import all_queries
     from citibike_analysis_spark.session import tune
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -19,7 +19,7 @@ sys.path.insert(0, REPO)
 def main() -> int:
     name = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
     from pyspark.sql import SparkSession
 

@@ -141,6 +141,28 @@ class TestApproxNtile:
         b = sorted(map(tuple, multi.select(*key, *outs).collect()))
         assert a == b
 
+    @pytest.mark.parametrize("name", ["a`b", "a.b"])
+    def test_multi_quotes_column_names(self, spark, name):
+        # the value column's name is interpolated into SQL text: a
+        # backtick ended the quoted identifier early (a ParseException,
+        # or injected SQL) and a dot read as struct-field access. The
+        # buckets must equal those of the same values under a plain name.
+        from citibike_analysis_spark.operators.windows import (
+            approx_ntile_multi,
+        )
+
+        df = spark.createDataFrame(
+            [(i, float((i * 37) % 101)) for i in range(200)],
+            "k: long, v: double",
+        )
+        plain = approx_ntile_multi(df, ["v"], 10, ["b"])
+        odd = approx_ntile_multi(
+            df.withColumnRenamed("v", name), [name], 10, ["b"]
+        )
+        assert odd.columns == ["k", name, "b"]
+        a = sorted(map(tuple, plain.select("k", "b").collect()))
+        assert a == sorted(map(tuple, odd.select("k", "b").collect()))
+
 
 class TestSpatialJoin:
     def test_band_join_equals_bruteforce(self, spark):

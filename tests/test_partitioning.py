@@ -11,7 +11,9 @@ claim in OPTIMIZATION_r14.md:
      partitions and the call must not add an exchange);
   3. a plan containing wide nodes (joins/aggregates/windows/...) is
      refused without probing .rdd (which would materialize query stages
-     under AQE) — composed callers keep their plan untouched.
+     under AQE) — composed callers keep their plan untouched. The test
+     is on plan NODE names, so a column whose name contains a wide
+     node's name (``Window_id``) does not disable the repair.
 """
 
 from __future__ import annotations
@@ -50,6 +52,29 @@ def test_spread_refuses_wide_plans(spark):
     assert spread(agg, "lang") is agg
     joined = d.join(d.select("doc_id"), "doc_id")
     assert spread(joined, "doc_id") is joined
+
+
+def test_spread_widens_scan_with_node_like_column_name(spark):
+    # "Window" inside a column name once matched the whole printed plan
+    # and silently refused this narrow scan
+    d = _docs(spark).withColumnRenamed("lang", "Window_id")
+    s = spread(d, "doc_id")
+    assert (
+        s.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    )
+    assert s.count() == d.count()
+
+
+def test_spread_refuses_persisted_wide_plan(spark):
+    # a persisted aggregate prints as InMemoryRelation over PHYSICAL
+    # nodes (HashAggregate, Exchange); probing its .rdd would run the
+    # cache job, so it stays refused
+    agg = _docs(spark).groupBy("lang").agg(F.count("*").alias("n")).persist()
+    try:
+        narrow = agg.select("lang")
+        assert spread(narrow, "lang") is narrow
+    finally:
+        agg.unpersist()
 
 
 def test_spread_refuses_missing_key_gracefully(spark):
