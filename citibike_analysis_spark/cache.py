@@ -30,7 +30,6 @@ persistent RDDs.
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
@@ -54,96 +53,78 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def reuse(df: DataFrame, env: str = "SPARK_GRAFT_DEDUP_REUSE") -> DataFrame:
-    """Materialize-once strategy for an intermediate that feeds 2-3 plan
-    branches (inverted indexes, LSH signatures, candidate lists). Without
-    it Spark re-executes the full upstream pipeline (tokenize, shingle,
-    sign, band) once per referencing branch.
+def reuse(df: DataFrame) -> DataFrame:
+    """Materialize-once for an intermediate that feeds 2-3 plan branches
+    (inverted indexes, LSH signatures, candidate lists). Without it
+    Spark re-executes the full upstream pipeline (tokenize, shingle,
+    sign, band) once per referencing branch: measured at sf0.1, no
+    materialization ran q34 ×1.2 and q50 ×1.35 slower.
 
-    Strategy is selectable via ``env`` = ``persist`` (default) |
-    ``checkpoint`` | ``none``. Measured A/B (scripts/ab_reuse.py, sf0.1,
-    fresh SparkSession per strategy — NB shared gateway JVM, so JIT
-    warmth biases against the first strategy; see that script's caveat —
-    5 reps, min/median over q36/q34/q50/q92): any materialization beats
-    none (q34 ×1.2, q50 ×1.35 slower without), and checkpoint measured
-    ~10% faster than persist locally (q36 min 2.06 s vs 2.59 s; within
-    the protocol's warmth-bias band). persist stays the DEFAULT because
-    ``localCheckpoint`` truncates lineage: a lost executor makes its
-    blocks unrecoverable and fails the query, while persist recomputes
-    from lineage — on a large cluster with preemption/decommissioning
-    that reliability gap is worth far more than 10% of a local run.
-    Deployments on stable executors can flip the knob. At corpus scale
-    the index may exceed memory; persist degrades to per-partition disk
-    blocks — the same worst case checkpoint always pays.
+    The frame is ``persist()``-ed and registered for
+    :func:`cache_scope` / :func:`release_all` cleanup. Persist, not
+    ``localCheckpoint``: a checkpoint truncates lineage, so a lost
+    executor makes its blocks unrecoverable and fails the query, while
+    persisted blocks recompute from lineage. At corpus scale the index
+    may exceed memory; persist then degrades to per-partition disk
+    blocks.
 
-    Both materializing strategies register the frame for
-    :func:`cache_scope` / :func:`release_all` cleanup.
+    On multi-process masters (:func:`_eager_default`) the persist is
+    also materialized with a ``count()`` before returning. Under AQE an
+    action materializes its shuffle / broadcast stages CONCURRENTLY,
+    and every stage subtree that reads a still-cold persist races to
+    compute the same blocks (a task that finds a block's write lock
+    held computes the iterator itself), so the pipeline can run once
+    PER BRANCH — q46's one-partition inverted index was evaluated eight
+    times inside one execution. On a cluster those redundant
+    evaluations burn executor task-time; the eager count removes them.
+    On a single-JVM ``local[N]`` they run on otherwise-idle cores while
+    the count is a serial barrier on the critical path, so there the
+    persist stays lazy (measures in :func:`_eager_default`).
 
-    ``SPARK_GRAFT_REUSE_EAGER=1`` additionally materializes the persist
-    with a ``count()`` before returning. Background (r14 profiling,
-    guide §7.1): under AQE an action materializes all its shuffle /
-    broadcast stages CONCURRENTLY, and every stage subtree referencing
-    a still-cold persist races to compute the same blocks — a task that
-    finds a block's write lock held computes the iterator itself
-    (BlockInfoManager semantics), so the pipeline can run once PER
-    BRANCH (q46's one-partition inverted index was evaluated EIGHT
-    times inside one execution — 8 identical ~0.9 s jobs). Eager
-    materialization removes that redundancy, but measured LOCALLY it
-    does not pay: the redundant evaluations run concurrently on
-    otherwise-idle cores (off the critical path) while the count() is a
-    serial barrier on it — fresh-JVM min-of-3 at sf0.1: q34 0.82 s lazy
-    vs 1.16 eager, q36 2.60 vs 3.48, q143 1.05 vs 1.33, q46 equal. The
-    default therefore stays LAZY; on a saturated production cluster the
-    redundant branch evaluations cost real resources and the knob is
-    the documented remedy.
-
-    Side effect on multi-process masters: there the default is eager
-    (:func:`_eager_default`), so ``reuse()`` runs a Spark job — the
-    ``count()`` — while the plan is being BUILT. Merely constructing a
-    query that reuses an intermediate (for ``explain()``, plan capture,
-    or a plan never executed) then executes that intermediate's full
-    pipeline. Set ``SPARK_GRAFT_REUSE_EAGER=0`` for plan-only work.
+    Side effect on multi-process masters: ``reuse()`` runs a Spark job
+    while the plan is being BUILT. Merely constructing a query that
+    reuses an intermediate (for ``explain()``, plan capture, or a plan
+    never executed) then executes that intermediate's full pipeline.
     """
-    mode = os.environ.get(env, "persist")
-    if mode == "checkpoint":
-        return track(df.localCheckpoint(eager=False))
-    if mode == "none":
-        return df
     out = track(df.persist())
     if _eager_default(df):
         out.count()
     return out
 
 
-def _eager_default(df: DataFrame) -> bool:
-    """Whether :func:`reuse` should materialize the persist eagerly.
+def _is_single_jvm_master(master: str) -> bool:
+    """True iff tasks share the driver's JVM.
 
-    ``SPARK_GRAFT_REUSE_EAGER`` (``1``/``0``) always wins. Unset, the
-    default is keyed to the MASTER (r15, r14-verdict item #2): on a
-    single-JVM ``local[N]`` the redundant branch evaluations the lazy
-    race tolerates run concurrently on otherwise-idle cores while an
-    eager ``count()`` is a serial barrier on the critical path —
-    measured slower three separate times (r14: q34 0.82 s lazy vs 1.16
-    eager, q36 2.60/3.48, q143 1.05/1.33; r15 pre-change: q46 1.27x,
-    q61 1.02x). On a MULTI-PROCESS master the race's redundant
-    evaluations burn real executor task-time that a shared cluster
-    charges for: on ``local-cluster[2,16,24g]`` at sf0.1 one q34
-    execution costs 38.5 executor task-seconds over 257 tasks lazy vs
-    27.7 over 194 eager (REST stage metrics) — the race is 28% of the
-    cluster's work for that query, gone under eager, while wall on the
-    IDLE rig is a wash (idle cores absorb the redundancy, exactly the
-    r14 finding). On a saturated production cluster each redundant
-    evaluation is a full extra pass over the reused intermediate, so
-    eager is the right multi-process default. The master test is the
-    same single-JVM check pick_pair_dot keys on."""
-    flag = os.environ.get("SPARK_GRAFT_REUSE_EAGER")
-    if flag is not None:
-        return flag == "1"
+    ``local``, ``local[N]``, ``local[N,maxFailures]`` and ``local[*]``
+    are the single-JVM masters; ``local-cluster[...]`` (no bracket
+    directly after "local") and every real cluster URL (spark://,
+    yarn, k8s://...) run executors in separate processes. Keying on
+    ``startswith("local[")`` alone would classify the bare ``local``
+    string as multi-process."""
+    return master == "local" or master.startswith("local[")
+
+
+def _eager_default(df: DataFrame) -> bool:
+    """Whether :func:`reuse` materializes the persist eagerly: on every
+    multi-process master, never on a single-JVM one.
+
+    On a single-JVM ``local[N]`` the redundant branch evaluations the
+    lazy race tolerates run concurrently on otherwise-idle cores while
+    an eager ``count()`` is a serial barrier on the critical path —
+    measured slower three separate times (fresh-JVM min-of-3 at sf0.1:
+    q34 0.82 s lazy vs 1.16 eager, q36 2.60/3.48, q143 1.05/1.33;
+    later q46 1.27x, q61 1.02x). On a MULTI-PROCESS master the race's
+    redundant evaluations burn real executor task-time that a shared
+    cluster charges for: on ``local-cluster[2,16,24g]`` at sf0.1 one
+    q34 execution costs 38.5 executor task-seconds over 257 tasks lazy
+    vs 27.7 over 194 eager (REST stage metrics) — the race is 28% of
+    the cluster's work for that query, gone under eager, while wall on
+    the IDLE rig is a wash."""
     try:
         master = df.sparkSession.sparkContext.master
     except Exception:  # noqa: BLE001 - session mid-teardown: stay lazy
         return False
-    return not (master == "local" or master.startswith("local["))
+    return not _is_single_jvm_master(master)
 
 
 def _checkpoint_rdd(df: DataFrame):

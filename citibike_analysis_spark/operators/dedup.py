@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from citibike_analysis_spark.cache import reuse
 from citibike_analysis_spark.functions.text import (
     bag_fingerprint,
     kgram_hashes_of,
@@ -24,16 +25,6 @@ from citibike_analysis_spark.functions.text import (
     tokens,
     winnow_of,
 )
-
-
-def _reuse(df: DataFrame) -> DataFrame:
-    """Materialize-once for an intermediate feeding 2-3 plan branches.
-    Delegates to :func:`citibike_analysis_spark.cache.reuse` (strategy
-    knob ``SPARK_GRAFT_DEDUP_REUSE``, measured A/B in its docstring),
-    which also registers the frame for ``cache_scope`` cleanup."""
-    from citibike_analysis_spark.cache import reuse
-
-    return reuse(df)
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -121,7 +112,7 @@ def _shingle_intersections(
     ).select("_id", F.xxhash64("_s").alias("_h"))
     # the index feeds three plan branches (sizes + both join sides);
     # materialize once so tokenize+shingle+explode doesn't run three times
-    inv = _reuse(inv)
+    inv = reuse(inv)
     sizes = inv.groupBy("_id").agg(F.count("*").alias("_n"))  # shingles distinct
     joinable = _df_capped(inv, "_h", max_doc_freq)
     # Materialize the df-capped view once (r15, guide §2.4): both
@@ -140,13 +131,13 @@ def _shingle_intersections(
     # duplicated one-pass agg; same economics as q68's rejected freq
     # persist).
     # Eager materialization of this persist was measured and REJECTED
-    # twice at the x10 cell (r15): blanket SPARK_GRAFT_REUSE_EAGER=1
-    # read q61 0.69x once but q34 2.85x and q46 1.21x worse; a targeted
+    # twice at the x10 cell (r15): a blanket eager reuse() read q61
+    # 0.69x once but q34 2.85x and q46 1.21x worse; a targeted
     # count() on joinable alone read q61 1.02 (wash) and q46 1.56x
     # worse on the re-run — the one-off q61 win did not reproduce. The
     # lazy local default stands (cache._eager_default).
     if max_doc_freq is not None:
-        joinable = _reuse(joinable)
+        joinable = reuse(joinable)
     # NOT width-pinned (r14): an explicit repartition(_h) on the join
     # side — the q39/q86 exchange-pin pattern — measured q34 1.81x and
     # q92 1.75x SLOWER (q46 wash): this self-join broadcasts one side
@@ -229,11 +220,11 @@ def ngram_containment_pairs(
     sizes, inter = _shingle_intersections(df, id_col, text_col, n, max_doc_freq)
     inter = inter.withColumnsRenamed({"_ida": "_x", "_idb": "_y"})
     # score the unordered intersection in both directions; materialize it
-    # first — it feeds BOTH union branches, and without _reuse the
+    # first — it feeds BOTH union branches, and without reuse() the
     # dominant-cost shingle self-join subtree appears twice in the plan
-    # (executes twice under SPARK_GRAFT_DEDUP_REUSE=none or with exchange
-    # reuse disabled — review finding; same rule as inv/cand/sh)
-    inter = _reuse(inter)
+    # (executes twice with exchange reuse disabled — review finding;
+    # same rule as inv/cand/sh)
+    inter = reuse(inter)
     # single-reference symmetrize (r14, guide §2.4): the explode derives
     # both directions from one copy of the intersection plan instead of
     # embedding it once per union side
@@ -391,7 +382,7 @@ def minhash_dedup_pairs(
     cand = minhash_lsh_candidates(df, id_col, text_col, num_hashes, bands, shingle_n)
     # the candidate list feeds the verify join and the id-set derivation;
     # materialize so the signature+banding pipeline runs once
-    cand = _reuse(cand)
+    cand = reuse(cand)
     # Shingle only candidate documents: broadcast-semi-join the candidate
     # id set *below* the shingle projection, so tokenization runs on the
     # (vanishing at scale) candidate subset, not the corpus.
@@ -408,7 +399,7 @@ def minhash_dedup_pairs(
         .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
         .select("_id", shingles_of(F.col("_tk"), shingle_n).alias("_sh"))
     )
-    sh = _reuse(sh)  # reused by both sides of the verify join
+    sh = reuse(sh)  # reused by both sides of the verify join
     j = (
         cand.join(sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sha"}), "id_a")
         .join(sh.withColumnsRenamed({"_id": "id_b", "_sh": "_shb"}), "id_b")
@@ -465,7 +456,7 @@ def winnow_overlap_pairs(
     only shrink, so pairs may fall below ``min_shared`` but none are
     added.
     """
-    fp = _reuse(  # both join sides read the same index — compute once
+    fp = reuse(  # both join sides read the same index — compute once
         winnow_fingerprints(df, id_col, text_col, k, w)
     )
     fp = _df_capped(fp, "fingerprint", max_doc_freq)
@@ -665,7 +656,7 @@ def contamination_flags_bloom(
     )
     # bsh feeds three branches (the sizing count, the bitmap build, the
     # exact-verify hash set) — materialize once
-    bsh = _reuse(
+    bsh = reuse(
         benchmark.select(tokens(F.col(text_col)).alias("_tk"))
         .select(F.explode(shingles_of(F.col("_tk"), n)).alias("_s"))
         .select(F.xxhash64("_s").alias("_h"))
@@ -1084,7 +1075,7 @@ def duplicated_spans(
     partition, which would sort the 10⁹ rows on one reducer), (4) a
     doc-bounded run merge. Nothing quadratic, nothing collected.
     """
-    pos = _reuse(_kgram_positions(df, id_col, text_col, k))
+    pos = reuse(_kgram_positions(df, id_col, text_col, k))
     dup_h = (
         pos.groupBy("_h")
         .agg(F.count("*").alias("_n"))
@@ -1132,7 +1123,7 @@ def scrub_duplicated_spans(
     tk = df.select(
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tk")
     )
-    pos = _reuse(_kgram_positions(df, id_col, text_col, k))
+    pos = reuse(_kgram_positions(df, id_col, text_col, k))
     gram_stats = pos.groupBy("_h").agg(
         F.count("*").alias("_n"),
         F.min(F.struct("_id", "pos")).alias("_first"),

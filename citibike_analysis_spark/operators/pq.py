@@ -147,7 +147,7 @@ def _round_half_up(arr, digits: int = 9):
     fractional part sits within 1e-3 of 0.5 — where float error in the
     scaling could land on the wrong side of the boundary the decimal
     repr defines — are re-rounded through ``decimal.Decimal(repr(x))``
-    exactly. Used by the Arrow encode to reproduce the fold path's
+    exactly. Used by the Arrow encode to reproduce the JVM fold's
     distance/norm rounding bit-for-bit (the parity contract pinned by
     tests/test_pq.py)."""
     import numpy as np
@@ -177,11 +177,11 @@ def _make_encode_udf(codebooks):
     distance matrix (n × ksub × dsub difference, SEQUENTIAL last-axis
     sum via cumsum — the exact left-to-right order `_sqdist`'s fold
     adds in, so the sums are bit-identical), rounds to 9 decimals with
-    :func:`_round_half_up` (the fold path's knife-edge convention),
+    :func:`_round_half_up` (the JVM fold's knife-edge convention),
     and takes the first argmin (== lowest cid — codebook cids are the
     contiguous 0..ksub-1). ``recon_norm`` is round(sqrt(Σ_j
     |codebook_j[code_j]|²), 9) with the per-entry squared norms
-    computed by the same driver-side Python float sums the fold path
+    computed by the same driver-side Python float sums the JVM fold
     broadcasts. Replaces an explode → broadcast-join → TWO-groupBy
     plan (a shuffle of n × m interpreted-fold rows — 484–521 s at
     dim 512/m=32/x100, SCALE.md r13 §5) with one shuffle-free
@@ -321,7 +321,6 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry_cols: list[str] | None = None,
-    method: str | None = None,
 ) -> DataFrame:
     """Encode a corpus against trained codebooks: (vec_id, codes
     array<int>, recon_norm double). ``recon_norm`` is |x̂| — the L2
@@ -333,74 +332,32 @@ def pq_encode(
     that ride the encode unchanged (r12: how `attach_pq_codes` keeps
     the IVF cid without re-joining the n-row output back to the lists
     — an avoided corpus-scale shuffle); names must not collide with
-    the internal ``cid``/``sub_j``/``_sv``/``_v``.
+    the internal ``_v``/``_e``.
 
-    ``method`` (default env ``SPARK_GRAFT_PQ_ENCODE``, else "arrow"):
-
-    - ``"arrow"`` (r14, r13 verdict #5): one SHUFFLE-FREE projection
-      through :func:`_make_encode_udf` — the per-subvector argmin is
-      dense linear algebra, exactly what the probe side's LUT seam
-      already batches through Arrow. The encode was the PQ family's
-      most expensive lifecycle op in its fold form (484–521 s at
-      dim 512/m=32/x100, interpreted folds over an exploded n × m
-      frame shuffled through two groupBys); the Arrow form removes
-      the explode, the shuffle, and the interpreted folds in one
-      move. Output pinned byte-identical to the fold path
-      (tests/test_pq.py parity across params and a non-normalized
-      randomized fixture — same codes, same recon_norm bits).
-    - ``"fold"``: the original explode → broadcast-join argmin →
-      regroup plan in pure JVM expressions — the parity reference,
-      and the no-Python-worker fallback.
+    One SHUFFLE-FREE projection through :func:`_make_encode_udf` (r14,
+    r13 verdict #5) — the per-subvector argmin is dense linear
+    algebra, exactly what the probe side's LUT seam already batches
+    through Arrow. The encode was the PQ family's most expensive
+    lifecycle op in its JVM form (484–521 s at dim 512/m=32/x100:
+    interpreted folds over an exploded n × m frame shuffled through
+    two groupBys); the Arrow form removes the explode, the shuffle, and
+    the interpreted folds in one move. That JVM plan is kept only as
+    the test-side parity reference: output is pinned byte-identical to
+    it (tests/test_pq.py, across params and a non-normalized randomized
+    fixture — same codes, same recon_norm bits).
     """
-    import os
-
-    m = len(codebooks)
-    dsub = len(codebooks[0][0][1])
     carry = carry_cols or []
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         *carry,
         as_double(F.col(vec_col)).alias("_v"),
     )
-    if method is None:
-        method = os.environ.get("SPARK_GRAFT_PQ_ENCODE", "arrow")
-    if method == "arrow":
-        enc = _make_encode_udf(codebooks)
-        return c.select(
-            "vec_id", *carry, enc(F.col("_v")).alias("_e")
-        ).select(
-            "vec_id",
-            F.col("_e.codes").alias("codes"),
-            F.col("_e.recon_norm").alias("recon_norm"),
-            *carry,
-        )
-    if method != "fold":
-        raise ValueError(f"unknown pq_encode method {method!r}")
-    spark = corpus.sparkSession
-    sub = _explode_subvectors(c, "vec_id", "_v", m, dsub, carry=carry)
-    assigned = _assign_codes(sub, "vec_id", spark, codebooks, carry=carry)
-    # |x̂|² = Σ_j |codebook_j[code_j]|² (subspaces are orthogonal
-    # coordinate blocks); the per-(sub_j, cid) norms are driver-side
-    sq = {
-        (j, cid): sum(x * x for x in v)
-        for j, book in enumerate(codebooks)
-        for cid, v in book
-    }
-    sq_df = spark.createDataFrame(
-        [(j, cid, s) for (j, cid), s in sq.items()],
-        "sub_j: int, cid: int, _sq: double",
-    )
-    return (
-        assigned.join(F.broadcast(sq_df), ["sub_j", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub_j", "cid"))),
-                lambda s: s["cid"],
-            ).alias("codes"),
-            F.round(F.sqrt(F.sum("_sq")), 9).alias("recon_norm"),
-            *[F.any_value(c).alias(c) for c in carry],
-        )
+    enc = _make_encode_udf(codebooks)
+    return c.select("vec_id", *carry, enc(F.col("_v")).alias("_e")).select(
+        "vec_id",
+        F.col("_e.codes").alias("codes"),
+        F.col("_e.recon_norm").alias("recon_norm"),
+        *carry,
     )
 
 
@@ -521,7 +478,7 @@ def pq_topk(
     list.
     """
     from citibike_analysis_spark.operators.similarity import (
-        _cand_broadcast_max_rows,
+        _CAND_BROADCAST_MAX_ROWS,
         _ivf_probe_divisor,
     )
 
@@ -532,7 +489,7 @@ def pq_topk(
     )
     q_hint = (
         F.broadcast
-        if n_q <= _cand_broadcast_max_rows() // _ivf_probe_divisor(m * ksub)
+        if n_q <= _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(m * ksub)
         else (lambda d: d.hint("shuffle_replicate_nl"))
     )
     _luts = _make_lut_udf(codebooks)
@@ -606,9 +563,9 @@ def pq_topk_rerank(
     all three.
     """
     from citibike_analysis_spark.operators.similarity import (
-        _cand_broadcast_max_rows,
+        _CAND_BROADCAST_MAX_ROWS,
         _ivf_probe_divisor,
-        ivf_pair_dot,
+        dot,
     )
 
     n_q = (
@@ -633,24 +590,23 @@ def pq_topk_rerank(
     dim = len(codebooks) * len(codebooks[0][0][1])
     cand_hint = (
         F.broadcast
-        if n_q * shortlist <= _cand_broadcast_max_rows()
+        if n_q * shortlist <= _CAND_BROADCAST_MAX_ROWS
         else (lambda d: d)
     )
     qv_hint = (
         F.broadcast
-        if n_q <= _cand_broadcast_max_rows() // _ivf_probe_divisor(dim)
+        if n_q <= _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(dim)
         else (lambda d: d)
     )
     # the shortlist join carries both vectors on the row — the IVF
-    # verify shape, same measured dot keying (fold; r11)
-    pdot = ivf_pair_dot(corpus.sparkSession)
+    # verify shape, same measured per-pair fold (r11, see ivf_topk)
     scored = (
         cv.join(cand_hint(cand), "neighbor_id")
         .join(qv_hint(qv), "query_id")
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -1063,12 +1019,11 @@ def ivfpq_topk(
     that weight; above the cap the probe side shuffles (codes side
     stays exchange-free)."""
     from citibike_analysis_spark.operators.similarity import (
-        _cand_broadcast_max_rows,
+        _CAND_BROADCAST_MAX_ROWS,
         _cent_df,
         _ivf_probe_divisor,
         _load_ivf_cents,
         dot as _dot,
-        ivf_pair_dot,
         norm as _norm,
     )
 
@@ -1106,7 +1061,7 @@ def ivfpq_topk(
     hint = (
         F.broadcast
         if n_q * nprobe
-        <= _cand_broadcast_max_rows() // _ivf_probe_divisor(m * ksub)
+        <= _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(m * ksub)
         else (lambda d: d)
     )
     codes = spark.table(f"{table}__codes")
@@ -1149,26 +1104,25 @@ def ivfpq_topk(
     dim = len(cents[0][1]) if cents else 64
     short_hint = (
         F.broadcast
-        if n_q * shortlist <= _cand_broadcast_max_rows()
+        if n_q * shortlist <= _CAND_BROADCAST_MAX_ROWS
         else (lambda d: d)
     )
     qv_hint = (
         F.broadcast
-        if n_q <= _cand_broadcast_max_rows() // _ivf_probe_divisor(dim)
+        if n_q <= _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(dim)
         else (lambda d: d)
     )
     cv = spark.table(table).select(
         "neighbor_id", F.col("_cv")
     ).withColumn("_cn", _norm(F.col("_cv")))
     qv = q.withColumn("_qn", _norm(F.col("_qv")))
-    pdot = ivf_pair_dot(spark)
     scored = (
         cv.join(short_hint(short), "neighbor_id")
         .join(qv_hint(qv), "query_id")
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                _dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from citibike_analysis_spark.cache import track
+from citibike_analysis_spark.cache import _is_single_jvm_master, track
 
 
 def as_double(vec: Column) -> Column:
@@ -162,8 +162,8 @@ def _pair_stage_width(spark, est_rows: int | None, row_bytes: int = 48) -> int:
 
 
 def pick_pair_dot(spark, n_rows: int | None = None) -> "Callable[[Column, Column], Column]":
-    """Per-pair dot choice for verify stages (r08 A/B,
-    `scripts/ab_pair_dot.py`), keyed on master AND corpus size:
+    """Per-pair dot choice for verify stages (r08 A/B, both sides
+    measured), keyed on master AND corpus size:
 
     - any MULTI-PROCESS master → :func:`pair_dot` (Arrow einsum). The
       interpreted :func:`dot` fold is JIT-flappy on executor JVMs
@@ -182,52 +182,10 @@ def pick_pair_dot(spark, n_rows: int | None = None) -> "Callable[[Column, Column
     Outputs are identical at the 6-decimal rounding every consumer
     COMPARES at (r09: rank windows and θ gates operate on
     ``round(sim, 6)``, pytest-pinned equal across both paths), so the
-    keying provably cannot change a result — only wall time.
-    ``SPARK_GRAFT_PAIR_DOT`` = ``fold`` | ``arrow`` overrides (the A/B
-    instrument)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_PAIR_DOT")
-    if mode is None:
-        single_jvm = _is_single_jvm_master(spark.sparkContext.master)
-        big = n_rows is not None and n_rows >= _ARROW_DOT_MIN_ROWS
-        mode = "fold" if (single_jvm and not big) else "arrow"
-    return dot if mode == "fold" else pair_dot
-
-
-def ivf_pair_dot(spark) -> "Callable[[Column, Column], Column]":
-    """Per-pair dot for the IVF verify stage: the FOLD, on every
-    master — measured, not assumed (r11, x100 = 200k vecs / 18.75M
-    candidate pairs, interleaved in-JVM A/B): local[32] fold
-    20.5–25.9 s vs arrow 59.5–65.4 s; local-cluster[2,16,24g] fold
-    21.9/22.6 s vs arrow 29.8/41.2 s — identical 5,000 result rows
-    both times. IVF's shape inverts the near-dup keying
-    (:func:`pick_pair_dot`): there the candidates are BARE id pairs
-    and the Arrow seam replaced per-pair interpreted folds cheaply;
-    here both d-dim vectors are already materialized on the joined
-    row, so the Arrow path adds ~2×dim doubles/pair of socket
-    serialization (~19 GB at the measured point) against a fold that
-    stays stable across process boundaries (no JIT flap observed at
-    either master — 2% spread). ``SPARK_GRAFT_PAIR_DOT`` still
-    overrides for A/B; results are mode-identical at the 6-decimal
-    rounded rank (pytest-pinned)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_PAIR_DOT", "fold")
-    return dot if mode == "fold" else pair_dot
-
-
-def _is_single_jvm_master(master: str) -> bool:
-    """True iff tasks share the driver's JVM (warm-JIT fold territory).
-
-    ``local``, ``local[N]``, ``local[N,maxFailures]`` and ``local[*]``
-    are the single-JVM masters; ``local-cluster[...]`` (no bracket
-    directly after "local") and every real cluster URL (spark://,
-    yarn, k8s://...) run executors in separate processes. r08 keyed on
-    ``startswith("local[")`` alone, which classified the bare
-    ``local`` string as multi-process — harmless for results but a
-    pointless Arrow tax on a 1-core master (r09 VERDICT nit)."""
-    return master == "local" or master.startswith("local[")
+    keying provably cannot change a result — only wall time."""
+    single_jvm = _is_single_jvm_master(spark.sparkContext.master)
+    big = n_rows is not None and n_rows >= _ARROW_DOT_MIN_ROWS
+    return dot if (single_jvm and not big) else pair_dot
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -458,7 +416,7 @@ def lsh_topk(
     """
     hint = F.broadcast
     if n_rows is not None:
-        cap = _cand_broadcast_max_rows()
+        cap = _CAND_BROADCAST_MAX_ROWS
         per_q = _cand_pair_estimate(n_rows, bits, tables, 1)
         if per_q > cap:
             est = per_q
@@ -1229,17 +1187,9 @@ def _compact_one_table(
 #: and broadcast`); 2M rows ≈ 32 MB of bare pairs — a 5× margin under
 #: the measured failure point even after the broadcast relation's
 #: object overhead. Above the cap the probe uses shuffle joins (same
-#: results, exchange-free on the bucketed index sides).
-#: ``SPARK_GRAFT_CAND_BROADCAST_MAX`` overrides (instruments/tests).
+#: results, exchange-free on the bucketed index sides). Read at call
+#: time, never bound at import, so tests can patch it.
 _CAND_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _cand_broadcast_max_rows() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_CAND_BROADCAST_MAX", _CAND_BROADCAST_MAX_ROWS)
-    )
 
 
 def _cand_pair_estimate(
@@ -1307,8 +1257,7 @@ def lsh_index_topk(
     probes in 2.8 s). The probe now PREFLIGHTS that estimate —
     ``n_vectors / 2^bits × tables × n_queries`` from the counts the
     stamp verification already pays plus one query-side count — and
-    above :data:`_CAND_BROADCAST_MAX_ROWS` (override:
-    ``SPARK_GRAFT_CAND_BROADCAST_MAX``) switches to SHUFFLE joins
+    above :data:`_CAND_BROADCAST_MAX_ROWS` switches to SHUFFLE joins
     instead of OOMing mid-query: the bucketed layout keeps both index
     sides exchange-free (buckets on (tbl,bkt), vectors on
     neighbor_id), so only the query/candidate side shuffles —
@@ -1363,7 +1312,7 @@ def lsh_index_topk(
         # any count is — and skipped entirely when the caller supplies
         # ``n_queries`` (it already paid a count, the pick_pair_dot
         # precedent).
-        cap = _cand_broadcast_max_rows()
+        cap = _CAND_BROADCAST_MAX_ROWS
         per_q = _cand_pair_estimate(n_vecs, bits, tables, 1)
         if per_q > cap:
             est = per_q
@@ -1430,7 +1379,7 @@ def _cent_df(spark, cents) -> DataFrame:
 
 def _make_assign_udf(cents, with_euclid: bool):
     """Arrow-batched nearest-centroid assignment (r14): one dense pass
-    per batch reproduces the fold path's scores BIT-FOR-BIT — the dot
+    per batch reproduces the JVM fold's scores BIT-FOR-BIT — the dot
     and norm folds sum left-to-right, so ``cumsum`` over the same
     element products yields identical doubles; the division, the
     euclid expression's operation grouping (``(vn² + cn²) −
@@ -1452,7 +1401,7 @@ def _make_assign_udf(cents, with_euclid: bool):
             for _, v in ordered
         ]
     )
-    # the fold path carries _cn = float(np.linalg.norm(v)) per centroid
+    # the JVM fold carries _cn = float(np.linalg.norm(v)) per centroid
     # and squares it JVM-side — same constant, same squaring op
     CNORM = np.asarray([float(np.linalg.norm(v)) for _, v in ordered])
     fields = "cid: int, _cos: double" + (", _ed: double" if with_euclid else "")
@@ -1502,31 +1451,26 @@ def _assign_nearest(
     vec: str,
     cents,
     with_euclid: bool = False,
-    method: str | None = None,
 ) -> DataFrame:
-    """Assign each vector to its max-cosine centroid: broadcast-join then
-    min(struct) pick — the group key is the id, the vector rides as
-    any_value. Output: (idname, vec, cid, _cos). Ties break on cid.
+    """Assign each vector to its max-cosine centroid in one shuffle-free
+    Arrow projection (:func:`_make_assign_udf`). Output: (idname, vec,
+    cid, _cos). Ties break on cid.
 
     ``with_euclid`` additionally emits ``_ed`` — the squared euclidean
     distance to the EUCLIDEAN-nearest centroid (which may differ from
-    the cosine-assigned one) — for ZERO extra folds: |v − c|² = |v|² +
+    the cosine-assigned one) — for ZERO extra dots: |v − c|² = |v|² +
     |c|² − 2·v·c, and v·c = _d·|v|·|c| re-uses the dot the cosine score
-    already paid (|c| rides the broadcast frame as a per-centroid
-    constant). This is the drift statistic's second axis (r12 VERDICT
-    #2): assignment cosine is blind to radial scaling by algebra
+    already paid. This is the drift statistic's second axis (r12
+    VERDICT #2): assignment cosine is blind to radial scaling by algebra
     (cos(αv, c) = cos(v, c)) and to negation on near-sign-symmetric
     corpora, while the euclidean distance to the nearest centroid
     flags radial shifts provably and negation wherever the corpus is
     radially structured (see :func:`append_to_ivf_index` for the
     measured boundary).
 
-    Cost shape: higher-order array folds run INTERPRETED (CodegenFallback),
-    so per-(row × centroid) work is the lever. Centroids are normalized
-    once driver-side (numpy, free) and the row norm is projected once
-    BEFORE the broadcast join, so each pair pays exactly one dot fold —
-    measured ~3x over the naive dot/(|v|·|c|) per pair at sf0.1.
-    cos(v, c) = dot(v, ĉ)/|v|: same argmax, same value to float noise.
+    Centroids are normalized once driver-side, so each (row × centroid)
+    pair pays exactly one dot: cos(v, c) = dot(v, ĉ)/|v|, same argmax,
+    same value to float noise.
 
     Zero-norm rows: an all-zero embedding would make _d = 0/0 = NaN and
     the argmax pick an arbitrary centroid, silently propagating NaN
@@ -1535,80 +1479,29 @@ def _assign_nearest(
     driver-side), so a zero vector scores cosine 0.0 against every
     centroid and deterministically lands in the lowest-cid cluster.
 
-    ``method`` (default env ``SPARK_GRAFT_ASSIGN``, else "arrow",
-    r14): the fold form above is ALSO a shuffle — the vector rides the
-    groupBy's any_value through an Exchange, so every build/append/
-    kmeans iteration moved corpus-scale vector bytes once — and its
-    per-(row × centroid) dot runs interpreted. The "arrow" form
-    (:func:`_make_assign_udf`) is one shuffle-free projection whose
-    scores are BIT-IDENTICAL to the fold's (summation order, operation
-    grouping, tie-breaks and the zero-norm floor all replicated —
-    parity pytest-pinned), so every downstream artifact (trained
-    centroids, stamps, q136 append-equals-rebuild equality, drift
-    baselines) is unchanged by construction. "fold" remains the
-    parity reference and the no-Python-worker fallback. Measured
-    (same-session A/B, SCALE.md r14): build_ivf_index over x100
-    drops 15.0 → 5.8 s at dim 64 and 89.1 → 37.9 s at dim 512
-    (1%-sample training, so the corpus assignment pass dominates),
-    with identical stamps and per-cid histograms both cells.
+    Why Arrow (r14): the JVM form — a broadcast cross join, an
+    interpreted per-pair dot fold, and a min(struct) groupBy on the id
+    that moved every vector through an Exchange — is kept only as the
+    test-side parity reference. The Arrow scores are BIT-IDENTICAL to
+    it (summation order, operation grouping, tie-breaks and the
+    zero-norm floor all replicated; tests/test_operators.py), so every
+    downstream artifact (trained centroids, stamps, q136
+    append-equals-rebuild equality, drift baselines) is unchanged by
+    construction. Measured (same-session A/B, SCALE.md r14):
+    build_ivf_index over x100 dropped 15.0 → 5.8 s at dim 64 and
+    89.1 → 37.9 s at dim 512, with identical stamps and per-cid
+    histograms both cells.
     """
-    import numpy as np
-    import os
-
-    if method is None:
-        method = os.environ.get("SPARK_GRAFT_ASSIGN", "arrow")
-    if method == "arrow":
-        assign = _make_assign_udf(cents, with_euclid)
-        out_cols = [
-            idname,
-            vec,
-            F.col("_a.cid").alias("cid"),
-            F.col("_a._cos").alias("_cos"),
-        ]
-        if with_euclid:
-            out_cols.append(F.col("_a._ed").alias("_ed"))
-        return df.select(
-            idname, vec, assign(F.col(vec)).alias("_a")
-        ).select(*out_cols)
-    if method != "fold":
-        raise ValueError(f"unknown _assign_nearest method {method!r}")
-    if with_euclid:
-        rows = [
-            (cid, (np.asarray(v) / (np.linalg.norm(v) or 1.0)).tolist(),
-             float(np.linalg.norm(v)))
-            for cid, v in cents
-        ]
-        cent = df.sparkSession.createDataFrame(
-            rows, "cid: int, _cvec: array<double>, _cn: double"
-        )
-    else:
-        cent = _cent_df(
-            df.sparkSession,
-            [
-                (cid, (np.asarray(v) / (np.linalg.norm(v) or 1.0)).tolist())
-                for cid, v in cents
-            ],
-        )
-    scored = (
-        df.withColumn("_vn", F.greatest(norm(F.col(vec)), F.lit(1e-300)))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_d", dot(F.col(vec), F.col("_cvec")) / F.col("_vn"))
-    )
-    aggs = [
-        F.min(F.struct((-F.col("_d")).alias("nd"), F.col("cid"))).alias("_m"),
-        F.any_value(vec).alias(vec),
+    assign = _make_assign_udf(cents, with_euclid)
+    out_cols = [
+        idname,
+        vec,
+        F.col("_a.cid").alias("cid"),
+        F.col("_a._cos").alias("_cos"),
     ]
-    out = [idname, vec, F.col("_m.cid").alias("cid"), (-F.col("_m.nd")).alias("_cos")]
     if with_euclid:
-        scored = scored.withColumn(
-            "_e",
-            F.col("_vn") * F.col("_vn")
-            + F.col("_cn") * F.col("_cn")
-            - F.lit(2.0) * F.col("_d") * F.col("_vn") * F.col("_cn"),
-        )
-        aggs.append(F.min("_e").alias("_ed"))
-        out.append("_ed")
-    return scored.groupBy(idname).agg(*aggs).select(*out)
+        out_cols.append(F.col("_a._ed").alias("_ed"))
+    return df.select(idname, vec, assign(F.col(vec)).alias("_a")).select(*out_cols)
 
 
 def _train_centroids(
@@ -2011,20 +1904,22 @@ def ivf_topk(
     # norms hoisted per side (bit-identical; near_duplicate_embeddings
     # finding): every list member joins ~queries·nprobe/nlist probes, so
     # one fold per corpus row beats two extra folds per pair. The one
-    # remaining per-pair dot is IVF-keyed (r11, see ivf_pair_dot: the
-    # FOLD wins on every measured master for this shape — both vectors
-    # already ride the joined row, so Arrow adds ~2×dim doubles/pair of
-    # serialization; measured 2.5×/1.4× slower at x100 on local[32] /
-    # local-cluster), and the rank compares the ROUNDED cosine (r09
-    # convention: the fold and the Arrow einsum differ in the last
-    # ULP, so a knife-edge rank-k pick must not depend on which path
-    # the env override ran; ties at the 6-decimal precision break on
+    # remaining per-pair dot is the FOLD on every master (r11, x100 =
+    # 200k vecs / 18.75M candidate pairs, interleaved in-JVM A/B):
+    # local[32] fold 20.5–25.9 s vs arrow 59.5–65.4 s;
+    # local-cluster[2,16,24g] fold 21.9/22.6 s vs arrow 29.8/41.2 s,
+    # identical 5,000 result rows both times. This shape inverts the
+    # near-dup keying (pick_pair_dot): there the candidates are BARE id
+    # pairs, here both d-dim vectors already ride the joined row, so
+    # Arrow adds ~2×dim doubles/pair of socket serialization against a
+    # fold that stays stable across process boundaries (2% spread). The
+    # rank compares the ROUNDED cosine (r09 convention, shared with the
+    # Arrow-dot consumers; ties at the 6-decimal precision break on
     # neighbor_id). q49's epoch is bumped with its q107 audit.
-    pdot = ivf_pair_dot(corpus.sparkSession)
     hint = F.broadcast
     if n_queries is not None and centroids:
         dim = len(centroids[0][1])
-        if n_queries * nprobe > _cand_broadcast_max_rows() // _ivf_probe_divisor(dim):
+        if n_queries * nprobe > _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(dim):
             hint = lambda d: d  # noqa: E731 — over cap: shuffle the probe side
     scored = (
         lists.withColumn("_cn", norm(F.col("_cv")))
@@ -2033,7 +1928,7 @@ def ivf_topk(
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -2297,7 +2192,7 @@ def ivf_index_topk(
     The probe frame broadcast is preflighted like the LSH probe's
     (r11; made DIM-AWARE in r12): probe rows carry the d-dim query
     vector, so the per-row weight scales with the embedding dimension
-    — the cap is :func:`_cand_broadcast_max_rows` ÷
+    — the cap is :data:`_CAND_BROADCAST_MAX_ROWS` ÷
     :func:`_ivf_probe_divisor`, with the divisor derived from the
     loaded centroids' actual dimension (``dim // 2``, preserving the
     r11 dim-64 calibration of ÷32; a hardcoded 32 admitted broadcasts
@@ -2341,13 +2236,12 @@ def ivf_index_topk(
     dim = len(cents[0][1]) if cents else 64
     hint = (
         F.broadcast
-        if n_q * nprobe <= _cand_broadcast_max_rows() // _ivf_probe_divisor(dim)
+        if n_q * nprobe <= _CAND_BROADCAST_MAX_ROWS // _ivf_probe_divisor(dim)
         else (lambda d: d)
     )
-    # same IVF-keyed per-pair dot and rounded-rank convention as
-    # ivf_topk (r11 — see ivf_pair_dot): both paths key identically,
-    # so index-vs-in-memory probe equality is preserved by construction
-    pdot = ivf_pair_dot(spark)
+    # same per-pair fold and rounded-rank convention as ivf_topk
+    # (r11): both paths score identically, so index-vs-in-memory probe
+    # equality is preserved by construction
     scored = (
         lists.withColumn("_cn", norm(F.col("_cv")))
         .join(hint(probes), "cid")
@@ -2355,7 +2249,7 @@ def ivf_index_topk(
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -2809,9 +2703,7 @@ def near_duplicate_embeddings(
     q39's boundary ratio from 2.38×/1.68× (r07) to **1.09×** at 10×,
     and on single-JVM ``local[N]`` once the corpus passes the measured
     crossover (~50k rows: fold wins 0.79× at 20k vecs, arrow wins
-    1.72× at 200k — see :func:`pick_pair_dot`). Measured by
-    ``scripts/ab_pair_dot.py``; ``SPARK_GRAFT_PAIR_DOT=fold|arrow``
-    overrides the keying.
+    1.72× at 200k — see :func:`pick_pair_dot`).
     """
     n_rows = None
     if bits == "auto":

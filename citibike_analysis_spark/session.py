@@ -187,8 +187,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or fetch) a SparkSession with the engine's defaults."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    """Create (or fetch) a SparkSession with the engine's defaults.
+
+    The default master is ``local[$SPARK_GRAFT_CPUS]``; unset, it is the
+    number of CPUs this process may run on (its affinity mask, which a
+    container or ``taskset`` narrows below the host's count)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)

@@ -21,6 +21,7 @@ truncates identically, so oracle parity holds under both conventions.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,28 +48,48 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # schema from the metastore instead; this dict is that metastore role
 # for the path-addressed testdata. METADATA only — the scan itself
 # still reads the parquet data at every action (nothing about results
-# or row data is cached), and the key includes the file mtime so
-# regenerated testdata invalidates immediately. Keyed on applicationId:
-# schema resolution depends on session confs (nanosAsLong /
-# inferTimestampNTZ), so a schema never leaks across sessions.
-# ``SPARK_GRAFT_SCHEMA_CACHE=0`` disables (A/B instrument).
-_SCHEMA_CACHE: dict = {}
+# or row data is cached). Entries are path → (applicationId, stamp,
+# schema): the stamp (:func:`_mtime_stamp`) invalidates regenerated or
+# overwritten data immediately, and the applicationId keeps a schema
+# from leaking across sessions (resolution depends on session confs —
+# nanosAsLong / inferTimestampNTZ); entries of other sessions are
+# dropped on the next miss, so the dict never outgrows one session.
+_SCHEMA_CACHE: dict[str, tuple] = {}
+
+
+def _mtime_stamp(path: str) -> int:
+    """Newest mtime (ns) of a parquet file, or of a dataset directory
+    and everything under it: overwriting a part file in place does not
+    bump its directory's mtime, so a directory's own mtime alone would
+    serve a stale schema. A single file costs one ``stat``."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return -1
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime_ns
+    newest = st.st_mtime_ns
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            try:
+                newest = max(newest, os.stat(os.path.join(root, name)).st_mtime_ns)
+            except OSError:
+                pass  # removed mid-walk: the directory's own mtime moved
+    return newest
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CACHE", "1") != "1":
-        return spark.read.parquet(path)
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    app = spark.sparkContext.applicationId
+    stamp = _mtime_stamp(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[:2] == (app, stamp):
+        return spark.read.schema(hit[2]).parquet(path)
+    for p, (a, _, _) in list(_SCHEMA_CACHE.items()):
+        if a != app:
+            _SCHEMA_CACHE.pop(p, None)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (app, stamp, df.schema)
+    return df
 
 
 def ns_long_to_ntz(colname: str) -> F.Column:

@@ -1,6 +1,6 @@
 """ADC-vs-exact probe A/B (r12 — the wall measurement behind
 `operators/pq.py`'s scan-bandwidth claim, same discipline as
-ab_pair_dot/ab_ivf: measure before claiming).
+ab_ivf: measure before claiming).
 
 One child JVM, one persisted IVF index over the rehearsal corpus, PQ
 codes attached. Interleaved cells:
@@ -16,13 +16,13 @@ the result-set agreement (ADC is approximate — its re-ranked top-k is
 held to overlap, not equality; q141 pins the recall floor).
 
 Usage: python scripts/ab_adc.py [workdir]
-Env: AD_SCALE (default x100), AD_REPS (default 3), AD_CPUS (default
-32), AD_K (default 10), AD_NQ (default 500), AD_NLIST (default 0 =
+Env: AD_SCALE (default x100), AD_REPS (default 3), SPARK_GRAFT_CPUS
+(default: the CPUs this process may run on), AD_K (default 10), AD_NQ (default 500), AD_NLIST (default 0 =
 n/1000 floor 16), AD_ITERS (default 2), AD_NPROBE (default 6),
 AD_SHORTLIST (default 50), AD_M (default 16), AD_KSUB (default 64),
 AD_DIM (default 64 — set 512 for the wide-embedding win-regime cell:
 the corpus is regenerated at that width by the same generator), and
-AD_MASTER (default local[AD_CPUS] — set e.g. local-cluster[2,16,24576]
+AD_MASTER (default local[SPARK_GRAFT_CPUS] — set e.g. local-cluster[2,16,24576]
 for a process-boundary cell: broadcast LUT bytes and task results
 cross real RPC instead of staying in one JVM).
 """
@@ -137,7 +137,7 @@ def main() -> int:
         os.environ.get("AD_SCALE", "x100"),
         dim=int(os.environ.get("AD_DIM", "64")),
     )
-    cpus = int(os.environ.get("AD_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = os.environ.get("AD_MASTER", f"local[{cpus}]")
     out = subprocess.run(
         [

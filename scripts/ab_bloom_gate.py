@@ -33,9 +33,9 @@ contamination is real and the bench gram set scales with the corpus.
 
 Usage: python scripts/ab_bloom_gate.py [workdir]
 Env: BG_SCALE (x10|x100, default x10), BG_BENCH_FRAC (default 0.1),
-BG_REPS (default 2), BG_PASSES (default 2), BG_CPUS (default 32),
-BG_MASTER (default local[BG_CPUS]; "cluster2" expands to
-local-cluster[2,BG_CPUS/2,24576] — the r10 verdict's process-boundary
+BG_REPS (default 2), BG_PASSES (default 2), SPARK_GRAFT_CPUS (default: the CPUs this
+process may run on), BG_MASTER (default local[SPARK_GRAFT_CPUS];
+"cluster2" expands to local-cluster[2,SPARK_GRAFT_CPUS/2,24576] — the r10 verdict's process-boundary
 cell: exact/shuffle really crosses executor sockets there, so the
 bloom's shuffle-row cut gets a chance to buy wall time it cannot buy
 in one JVM where "shuffle" is a memcpy).
@@ -196,7 +196,7 @@ def main() -> int:
     frac = os.environ.get("BG_BENCH_FRAC", "0.1")
     reps = os.environ.get("BG_REPS", "2")
     passes = int(os.environ.get("BG_PASSES", "2"))
-    cpus = int(os.environ.get("BG_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = os.environ.get("BG_MASTER", f"local[{cpus}]")
     if master == "cluster2":
         master = f"local-cluster[2,{cpus // 2},24576]"

@@ -27,7 +27,8 @@ per-rep cache clear, min reported (the scale_rehearsal convention).
 
 Usage: python scripts/ab_compact.py [workdir]
 Env: AC_SCALE (default x10), AC_APPENDS (default 32), AC_REPS
-(default 3), AC_CPUS (default 32), AC_K (default 10), AC_NQ (default
+(default 3), SPARK_GRAFT_CPUS (default: the CPUs this process may
+run on), AC_K (default 10), AC_NQ (default
 500 query vectors), AC_BITS (default 6 — SIZE IT to the corpus: the
 probe's candidate set is explicit-bits-sized, ~n/2^bits vecs per
 bucket x 8 tables per query; bits=6 at 200k vecs broadcasts ~10M-pair
@@ -128,7 +129,7 @@ spark.stop()
 def main() -> int:
     work = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_rehearsal"
     corpus = ensure_corpus(work, os.environ.get("AC_SCALE", "x10"))
-    cpus = int(os.environ.get("AC_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     out = subprocess.run(
         [
             sys.executable, "-c", _CHILD.format(repo=REPO, cpus=cpus),

@@ -37,7 +37,8 @@ run, not a toy one.
 
 Usage: python scripts/ab_ivf.py [workdir]
 Env: AI_SCALE (default x10), AI_APPENDS (default 16), AI_REPS
-(default 3), AI_CPUS (default 32), AI_K (default 10), AI_NQ (default
+(default 3), SPARK_GRAFT_CPUS (default: the CPUs this process may
+run on), AI_K (default 10), AI_NQ (default
 500), AI_NLIST (default 0 = n/1000 floor 16), AI_ITERS (default 2),
 AI_NPROBE (default 6), AI_REMOVE_FRAC (default 0.1), AI_RECALL_NQ
 (default 50), AI_RECALL_NPROBES (default "1,2,4,6,8,12").
@@ -188,7 +189,7 @@ spark.stop()
 def main() -> int:
     work = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_rehearsal"
     corpus = ensure_corpus(work, os.environ.get("AI_SCALE", "x10"))
-    cpus = int(os.environ.get("AI_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     out = subprocess.run(
         [
             sys.executable, "-c", _CHILD.format(repo=REPO, cpus=cpus),

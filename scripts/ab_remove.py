@@ -23,7 +23,8 @@ unconfounded by the r11 shuffle fallback.
 
 Usage: python scripts/ab_remove.py [workdir]
 Env: AR_SCALE (default x10), AR_REMOVE_FRAC (default 0.1), AR_REPS
-(default 3), AR_CPUS (default 32), AR_K (default 10), AR_NQ (default
+(default 3), SPARK_GRAFT_CPUS (default: the CPUs this process may
+run on), AR_K (default 10), AR_NQ (default
 500), AR_BITS (default 0 = auto-size via _bits_for_n).
 Prints one JSON line per point and a summary with the removal wall and
 the tombstoned/fresh and compacted/tombstoned probe-wall ratios.
@@ -114,7 +115,7 @@ spark.stop()
 def main() -> int:
     work = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_rehearsal"
     corpus = ensure_corpus(work, os.environ.get("AR_SCALE", "x10"))
-    cpus = int(os.environ.get("AR_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     out = subprocess.run(
         [
             sys.executable, "-c", _CHILD.format(repo=REPO, cpus=cpus),

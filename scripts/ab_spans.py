@@ -18,8 +18,8 @@ scale; monotonic shared-JIT state is the ab_compact rationale), reps
 with per-rep cache isolation, min-of-reps reported.
 
 Usage: python scripts/ab_spans.py [workdir]
-Env: AS_SCALES (default x1,x10,x100), AS_REPS (default 3), AS_CPUS
-(default 32), AS_K (default 8).
+Env: AS_SCALES (default x1,x10,x100), AS_REPS (default 3),
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on), AS_K (default 8).
 Prints one JSON line per scale and a markdown table for SCALE.md.
 """
 
@@ -101,7 +101,7 @@ def main() -> int:
     work = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_rehearsal"
     scales = [s for s in os.environ.get("AS_SCALES", "x1,x10,x100").split(",") if s]
     reps = int(os.environ.get("AS_REPS", "3"))
-    cpus = os.environ.get("AS_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     k = int(os.environ.get("AS_K", "8"))
     rows = []
     for scale in scales:

@@ -16,7 +16,8 @@ Usage:
   python scripts/ab_trees.py q77_semantic_dedup[,q36_minhash_dedup...] \
       [ref1 ref2 ...]            # default refs: previous 'round N:' marker
 Options via env: AB_SF_DIR (default /root/testdata/sf0.1),
-AB_REPS (default 7), AB_PASSES (default 2), AB_CPUS (default 32).
+AB_REPS (default 7), AB_PASSES (default 2), SPARK_GRAFT_CPUS (default:
+the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ def main() -> int:
     sf_dir = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("AB_REPS", "7"))
     passes = int(os.environ.get("AB_PASSES", "2"))
-    cpus = os.environ.get("AB_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
     trees: dict[str, str] = {}
     for ref in refs:

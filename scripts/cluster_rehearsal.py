@@ -16,7 +16,8 @@ Near-dup family (q36/q39/q46/q61) runs at the 10x rehearsal corpus
 generator if absent); the flagship pair (q20/q104) at sf0.1.
 
 Usage: python scripts/cluster_rehearsal.py [workdir]
-Env: CR_REPS (default 2), CR_PASSES (default 2), CR_CPUS (default 32),
+Env: CR_REPS (default 2), CR_PASSES (default 2), SPARK_GRAFT_CPUS
+(default: the CPUs this process may run on),
 CR_SF_DIR (default /root/testdata/sf0.1), CR_SCALE (default x10 — set
 x100 for the next-decade amortization point), CR_QUERIES /
 CR_SF_QUERIES (comma lists overriding the defaults below),
@@ -219,7 +220,7 @@ def main() -> int:
     sf_dir = os.environ.get("CR_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("CR_REPS", "2"))
     passes = int(os.environ.get("CR_PASSES", "2"))
-    cpus = int(os.environ.get("CR_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     masters = {
         "local": f"local[{cpus}]",
         "cluster2": f"local-cluster[2,{cpus // 2},24576]",

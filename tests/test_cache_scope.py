@@ -52,7 +52,7 @@ def test_sign_lsh_near_dup_releases_persists(spark):
 
 
 def test_minhash_dedup_releases_persists(spark):
-    # the dedup _reuse persists route through the same ledger
+    # the dedup operators' reuse() persists route through the same ledger
     _reset(spark)
     assert _n_persistent(spark) == 0
     _run_scoped(spark, "q36_minhash_dedup")

@@ -223,6 +223,16 @@ class TestKMeansAudit:
         assert len(hist2) == 1
 
 
+def _force_pair_dot(monkeypatch, side: str) -> None:
+    """Make every verify stage use one per-pair dot: ``fold`` (the
+    interpreted :func:`dot`) or ``arrow`` (the :func:`pair_dot` einsum),
+    whatever the master and corpus size would select."""
+    from citibike_analysis_spark.operators import similarity as S
+
+    chosen = S.dot if side == "fold" else S.pair_dot
+    monkeypatch.setattr(S, "pick_pair_dot", lambda spark, n_rows=None: chosen)
+
+
 class TestPairDotVerify:
     def test_arrow_dot_matches_fold_at_rounding(self, spark, monkeypatch):
         """r08: the verify stage's per-pair dot is master-keyed —
@@ -246,9 +256,9 @@ class TestPairDotVerify:
             rows = near_duplicate_embeddings(emb, **params).collect()
             return sorted((r["id_a"], r["id_b"], r["cosine_sim"]) for r in rows)
 
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "fold")
+        _force_pair_dot(monkeypatch, "fold")
         via_fold = pairs()
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "arrow")
+        _force_pair_dot(monkeypatch, "arrow")
         via_arrow = pairs()
         assert via_arrow, "empty pair set proves nothing"
         assert via_arrow == via_fold
@@ -300,64 +310,43 @@ class TestPairDotVerify:
             )
             return sd, inc
 
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "fold")
+        _force_pair_dot(monkeypatch, "fold")
         via_fold = run()
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "arrow")
+        _force_pair_dot(monkeypatch, "arrow")
         via_arrow = run()
         assert via_fold[0] and via_fold[1], "empty results prove nothing"
-        assert via_arrow == via_fold
-
-    def test_ivf_mode_parity(self, spark, monkeypatch):
-        """r11: ivf_topk joined the pair-dot consumers (its verify stage
-        was the last interpreted per-pair fold at candidate scale). The
-        full top-k set — rows, ids, ranks, rounded cosines — must be
-        identical under either dot path; ranks compare the ROUNDED
-        cosine so a knife-edge rank-k pick cannot depend on which path
-        ran (the r09 convention)."""
-        from citibike_analysis_spark.operators.similarity import ivf_topk
-        from citibike_analysis_spark.sources.tables import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-        queries = emb.filter(F.col("vec_id") < 10)
-
-        def run():
-            rows = ivf_topk(emb, queries, k=5, nlist=16, nprobe=6).collect()
-            return sorted(
-                (r["query_id"], r["neighbor_id"], r["rk"], r["cosine_sim"])
-                for r in rows
-            )
-
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "fold")
-        via_fold = run()
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "arrow")
-        via_arrow = run()
-        assert via_arrow, "empty top-k proves nothing"
         assert via_arrow == via_fold
 
     def test_pick_pair_dot_keying(self, spark, monkeypatch):
         """The dot-choice policy itself (r08): fold on small-corpus
         single-JVM local[N]; arrow on multi-process masters (keyed off
-        the master URL) or past the measured ~50k-row local crossover;
-        env override beats both axes."""
+        the master URL) or past the measured ~50k-row local crossover."""
         from citibike_analysis_spark.operators import similarity as S
 
         assert spark.sparkContext.master.startswith("local[")  # precondition
-        monkeypatch.delenv("SPARK_GRAFT_PAIR_DOT", raising=False)
         assert S.pick_pair_dot(spark) is S.dot
         assert S.pick_pair_dot(spark, n_rows=10_000) is S.dot
         assert S.pick_pair_dot(spark, n_rows=S._ARROW_DOT_MIN_ROWS) is S.pair_dot
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "arrow")
+        monkeypatch.setattr(S, "_is_single_jvm_master", lambda master: False)
         assert S.pick_pair_dot(spark) is S.pair_dot
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "fold")
-        assert S.pick_pair_dot(spark, n_rows=10**9) is S.dot
+        assert S.pick_pair_dot(spark, n_rows=10_000) is S.pair_dot
 
     def test_single_jvm_master_classification(self):
         """r09 VERDICT nit: bare `local` (no brackets) is just as
         single-JVM as `local[N]` — the r08 predicate classified it as
-        multi-process and paid the Arrow tax on a 1-core master."""
-        from citibike_analysis_spark.operators.similarity import (
+        multi-process and paid the Arrow tax on a 1-core master. The
+        eager-reuse decision keys on the same predicate: lazy on every
+        single-JVM master, eager on every multi-process one."""
+        from types import SimpleNamespace
+
+        from citibike_analysis_spark.cache import (
+            _eager_default,
             _is_single_jvm_master,
         )
+
+        def frame_on(master):
+            ctx = SimpleNamespace(master=master)
+            return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=ctx))
 
         single = ["local", "local[4]", "local[*]", "local[4,2]"]
         multi = [
@@ -368,6 +357,8 @@ class TestPairDotVerify:
         ]
         assert all(_is_single_jvm_master(m) for m in single)
         assert not any(_is_single_jvm_master(m) for m in multi)
+        assert not any(_eager_default(frame_on(m)) for m in single)
+        assert all(_eager_default(frame_on(m)) for m in multi)
 
     def test_brute_force_topk_mode_parity(self, spark, monkeypatch):
         """q38's exact top-k must produce identical (query, neighbor,
@@ -388,8 +379,8 @@ class TestPairDotVerify:
                 for r in brute_force_topk(emb, queries, k=7).collect()
             )
 
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "fold")
+        _force_pair_dot(monkeypatch, "fold")
         via_fold = run()
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_DOT", "arrow")
+        _force_pair_dot(monkeypatch, "arrow")
         via_arrow = run()
         assert via_fold and via_arrow == via_fold

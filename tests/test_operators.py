@@ -16,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
+#: the probe-side broadcast cap, patched to force the shuffle fallback
+_CAP = "citibike_analysis_spark.operators.similarity._CAND_BROADCAST_MAX_ROWS"
 
 
 @pytest.fixture(scope="module")
@@ -562,7 +564,7 @@ class TestPersistedLshIndex:
             )
             assert broadcast_path, "empty probe proves nothing"
 
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = lsh_index_topk(
                 spark, "lsh_idx_cap", queries, k=5, **params
@@ -1413,7 +1415,7 @@ class TestR12IndexGuards:
             assert ref512, "empty probe proves nothing"
             # cap chosen so n_q*nprobe=10 passes ÷32 (dim 64) but not
             # ÷256 (dim 512): 320//32 = 10 ≥ 10; 320//256 = 1 < 10
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "320")
+            monkeypatch.setattr(_CAP, 320)
             plan64 = (
                 ivf_index_topk(spark, t64, q64, k=3, nprobe=2)
                 ._jdf.queryExecution().executedPlan().toString()
@@ -1506,7 +1508,7 @@ class TestR12IndexGuards:
         assert broadcast_path, "empty probe proves nothing"
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = lsh_topk(
                 emb, queries, k=5, n_rows=n, n_queries=10, **params
@@ -1566,7 +1568,7 @@ class TestR12IndexGuards:
                 ),
             )
             assert with_nq < base  # the query-count job is gone
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAP, 0)
             shortcct = jobs_during(
                 "probe_sc",
                 lambda: lsh_index_topk(spark, t, queries, k=5, **params),
@@ -1576,7 +1578,7 @@ class TestR12IndexGuards:
             key = lambda rows: sorted(
                 (r["query_id"], r["neighbor_id"], r["rk"]) for r in rows
             )
-            monkeypatch.delenv("SPARK_GRAFT_CAND_BROADCAST_MAX")
+            monkeypatch.undo()
             assert key(
                 lsh_index_topk(
                     spark, t, queries, k=5, n_queries=10, **params
@@ -1605,7 +1607,7 @@ class TestR12IndexGuards:
         assert broadcast_path
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = ivf_topk(emb, queries, n_queries=10, **params)
             assert key(fallback.collect()) == broadcast_path
@@ -1991,12 +1993,61 @@ class TestR14PropertyCarryGuard:
                 spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
 
 
+def _assign_nearest_fold(df, idname, vec, cents, with_euclid=False):
+    """JVM reference for ``similarity._assign_nearest``: broadcast the
+    normalized centroids, cross join, one interpreted dot fold per
+    (row × centroid) pair, then a min(struct) groupBy on the id (ties
+    on cid). The Arrow projection must reproduce it bit for bit."""
+    import numpy as np
+
+    from citibike_analysis_spark.operators.similarity import _cent_df, dot, norm
+
+    if with_euclid:
+        rows = [
+            (cid, (np.asarray(v) / (np.linalg.norm(v) or 1.0)).tolist(),
+             float(np.linalg.norm(v)))
+            for cid, v in cents
+        ]
+        cent = df.sparkSession.createDataFrame(
+            rows, "cid: int, _cvec: array<double>, _cn: double"
+        )
+    else:
+        cent = _cent_df(
+            df.sparkSession,
+            [
+                (cid, (np.asarray(v) / (np.linalg.norm(v) or 1.0)).tolist())
+                for cid, v in cents
+            ],
+        )
+    scored = (
+        df.withColumn("_vn", F.greatest(norm(F.col(vec)), F.lit(1e-300)))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("_d", dot(F.col(vec), F.col("_cvec")) / F.col("_vn"))
+    )
+    aggs = [
+        F.min(F.struct((-F.col("_d")).alias("nd"), F.col("cid"))).alias("_m"),
+        F.any_value(vec).alias(vec),
+    ]
+    out = [idname, vec, F.col("_m.cid").alias("cid"), (-F.col("_m.nd")).alias("_cos")]
+    if with_euclid:
+        scored = scored.withColumn(
+            "_e",
+            F.col("_vn") * F.col("_vn")
+            + F.col("_cn") * F.col("_cn")
+            - F.lit(2.0) * F.col("_d") * F.col("_vn") * F.col("_cn"),
+        )
+        aggs.append(F.min("_e").alias("_ed"))
+        out.append("_ed")
+    return scored.groupBy(idname).agg(*aggs).select(*out)
+
+
 class TestR14ArrowAssignParity:
     """r14: the Arrow nearest-centroid assignment must be bit-identical
-    to the fold path — same cid, same _cos double, same _ed double —
-    so every artifact trained or stamped through it (centroids, IVF
-    stamps, drift baselines, q136's append-equals-rebuild equality) is
-    unchanged by construction."""
+    to the JVM fold reference (:func:`_assign_nearest_fold`) — same
+    cid, same _cos double, same _ed double — so every artifact trained
+    or stamped through it (centroids, IVF stamps, drift baselines,
+    q136's append-equals-rebuild equality) is unchanged by
+    construction."""
 
     def _parity(self, df, cents, with_euclid):
         from citibike_analysis_spark.operators.similarity import (
@@ -2005,16 +2056,15 @@ class TestR14ArrowAssignParity:
 
         cols = ["cid", "_cos"] + (["_ed"] if with_euclid else [])
 
-        def grab(method):
+        def grab(assign):
             return {
                 r["_id"]: tuple(r[c] for c in cols)
-                for r in _assign_nearest(
-                    df, "_id", "_v", cents,
-                    with_euclid=with_euclid, method=method,
+                for r in assign(
+                    df, "_id", "_v", cents, with_euclid=with_euclid
                 ).collect()
             }
 
-        fold, arrow = grab("fold"), grab("arrow")
+        fold, arrow = grab(_assign_nearest_fold), grab(_assign_nearest)
         assert fold and fold == arrow
 
     def test_parity_on_sf_corpus_both_axes(self, spark):
@@ -2059,32 +2109,20 @@ class TestR14ArrowAssignParity:
         cents = _train_centroids(df, "_id", "_v", 4, 3)
         self._parity(df, cents, with_euclid=True)
 
-    def test_training_is_method_invariant(self, spark):
-        """Centroids trained through either assignment path are
-        IDENTICAL (the bit-parity consequence that matters most: every
-        stamp and every persisted index is method-independent)."""
-        import os
-
-        from citibike_analysis_spark.operators.similarity import (
-            _train_centroids,
-            as_double,
-        )
+    def test_training_is_method_invariant(self, spark, monkeypatch):
+        """Centroids trained through the Arrow assignment and through
+        the JVM fold reference are IDENTICAL (the bit-parity
+        consequence that matters most: every stamp and every persisted
+        index is independent of how assignment is computed)."""
+        from citibike_analysis_spark.operators import similarity as S
         from citibike_analysis_spark.sources.tables import load_table
 
         emb = load_table(spark, SF, "embeddings")
         c = emb.select(
             F.col("vec_id").alias("_id"),
-            as_double(F.col("embedding")).alias("_v"),
+            S.as_double(F.col("embedding")).alias("_v"),
         )
-        prev = os.environ.get("SPARK_GRAFT_ASSIGN")
-        try:
-            os.environ["SPARK_GRAFT_ASSIGN"] = "fold"
-            fold_cents = _train_centroids(c, "_id", "_v", 8, 3)
-            os.environ["SPARK_GRAFT_ASSIGN"] = "arrow"
-            arrow_cents = _train_centroids(c, "_id", "_v", 8, 3)
-        finally:
-            if prev is None:
-                os.environ.pop("SPARK_GRAFT_ASSIGN", None)
-            else:
-                os.environ["SPARK_GRAFT_ASSIGN"] = prev
+        arrow_cents = S._train_centroids(c, "_id", "_v", 8, 3)
+        monkeypatch.setattr(S, "_assign_nearest", _assign_nearest_fold)
+        fold_cents = S._train_centroids(c, "_id", "_v", 8, 3)
         assert fold_cents == arrow_cents

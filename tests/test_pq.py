@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
+#: the probe-side broadcast cap, patched to force the shuffle fallback
+_CAP = "citibike_analysis_spark.operators.similarity._CAND_BROADCAST_MAX_ROWS"
 
 
 @pytest.fixture(scope="module")
@@ -464,7 +466,7 @@ class TestR13IvfPqMaintenance:
             )
             assert ref_idx
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "1")
+            monkeypatch.setattr(_CAP, 1)
             plan = (
                 ivfpq_topk(spark, t, q, k=3, nprobe=4, shortlist=20)
                 ._jdf.queryExecution()
@@ -651,7 +653,7 @@ class TestR14PqTopkPreflight:
             auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
             try:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-                monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "1")
+                monkeypatch.setattr(_CAP, 1)
                 over = pq_topk(codes, q, books, k=3, n_queries=5)
                 plan = (
                     over._jdf.queryExecution().executedPlan().toString()
@@ -670,24 +672,71 @@ class TestR14PqTopkPreflight:
             codes.unpersist()
 
 
+def _pq_encode_fold(corpus, codebooks, carry_cols=None):
+    """JVM reference for ``pq.pq_encode``: explode the vectors into
+    subvectors, broadcast-join the codebooks for a squared-L2 argmin per
+    subspace, then regroup the codes per vector with |x̂| from the
+    driver-side squared norms of the picked entries. The Arrow encode
+    must reproduce it byte for byte."""
+    from citibike_analysis_spark.operators.pq import (
+        _assign_codes,
+        _explode_subvectors,
+    )
+    from citibike_analysis_spark.operators.similarity import as_double
+
+    m = len(codebooks)
+    dsub = len(codebooks[0][0][1])
+    carry = carry_cols or []
+    spark = corpus.sparkSession
+    c = corpus.select(
+        "vec_id", *carry, as_double(F.col("embedding")).alias("_v")
+    )
+    sub = _explode_subvectors(c, "vec_id", "_v", m, dsub, carry=carry)
+    assigned = _assign_codes(sub, "vec_id", spark, codebooks, carry=carry)
+    sq_df = spark.createDataFrame(
+        [
+            (j, cid, sum(x * x for x in v))
+            for j, book in enumerate(codebooks)
+            for cid, v in book
+        ],
+        "sub_j: int, cid: int, _sq: double",
+    )
+    return (
+        assigned.join(F.broadcast(sq_df), ["sub_j", "cid"])
+        .groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("sub_j", "cid"))),
+                lambda s: s["cid"],
+            ).alias("codes"),
+            F.round(F.sqrt(F.sum("_sq")), 9).alias("recon_norm"),
+            *[F.any_value(c).alias(c) for c in carry],
+        )
+    )
+
+
 class TestR14ArrowEncodeParity:
     """r14 (r13 verdict #5): the Arrow encode must be byte-identical to
-    the fold path — same codes, same recon_norm bits — across
-    parameterizations and on a non-normalized randomized fixture, while
-    replacing the fold's explode+shuffle plan with a shuffle-free
-    projection."""
+    the JVM fold reference (:func:`_pq_encode_fold`) — same codes, same
+    recon_norm bits — across parameterizations and on a non-normalized
+    randomized fixture, while replacing the fold's explode+shuffle plan
+    with a shuffle-free projection."""
 
-    def _both(self, df, books, **kw):
+    def _both(self, df, books, carry_cols=None):
         from citibike_analysis_spark.operators.pq import pq_encode
 
-        fold = {
-            r["vec_id"]: (list(r["codes"]), r["recon_norm"])
-            for r in pq_encode(df, books, method="fold", **kw).collect()
-        }
-        arrow = {
-            r["vec_id"]: (list(r["codes"]), r["recon_norm"])
-            for r in pq_encode(df, books, method="arrow", **kw).collect()
-        }
+        cols = ["codes", "recon_norm", *(carry_cols or [])]
+
+        def grab(encoded):
+            return {
+                r["vec_id"]: tuple(
+                    list(r[c]) if c == "codes" else r[c] for c in cols
+                )
+                for r in encoded.collect()
+            }
+
+        fold = grab(_pq_encode_fold(df, books, carry_cols))
+        arrow = grab(pq_encode(df, books, carry_cols=carry_cols))
         return fold, arrow
 
     def test_parity_on_corpus_both_params(self, spark, emb, books):
@@ -718,34 +767,21 @@ class TestR14ArrowEncodeParity:
             "vec_id: long, tag: int, embedding: array<double>",
         )
         books = train_pq_codebooks(df, m=4, ksub=8, dim=32, train_iters=3)
-        from citibike_analysis_spark.operators.pq import pq_encode
-
-        fold = {
-            r["vec_id"]: (list(r["codes"]), r["recon_norm"], r["tag"])
-            for r in pq_encode(
-                df, books, carry_cols=["tag"], method="fold"
-            ).collect()
-        }
-        arrow = {
-            r["vec_id"]: (list(r["codes"]), r["recon_norm"], r["tag"])
-            for r in pq_encode(
-                df, books, carry_cols=["tag"], method="arrow"
-            ).collect()
-        }
+        fold, arrow = self._both(df, books, carry_cols=["tag"])
         assert fold and fold == arrow
 
     def test_arrow_plan_is_shuffle_free(self, spark, emb, books):
         from citibike_analysis_spark.operators.pq import pq_encode
 
         plan = (
-            pq_encode(emb, books, method="arrow")
+            pq_encode(emb, books)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         assert "Exchange" not in plan
         fold_plan = (
-            pq_encode(emb, books, method="fold")
+            _pq_encode_fold(emb, books)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

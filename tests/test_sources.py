@@ -8,6 +8,7 @@ document corruption (output/nearby_stations.json).
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -284,3 +285,29 @@ def test_events_reader_native_dispatch(spark, tmp):
     got2 = {r.event_id: r for r in df2.collect()}
     assert got2[0].ts == base and got2[0].ts_ns == expected_ns
     assert dict(df2.dtypes)["ts"] == "timestamp_ntz"
+
+
+def test_schema_cache_sees_in_place_part_overwrite(spark, tmp):
+    """A parquet DIRECTORY whose part file is rewritten in place keeps
+    its directory mtime, so the schema cache must key on the newest
+    file under it; the rewriting miss also drops entries left by other
+    sessions, so the cache never outgrows one session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from citibike_analysis_spark.sources import tables
+    from citibike_analysis_spark.sources.tables import load_table
+
+    d = os.path.join(tmp, "t.parquet")
+    os.makedirs(d)
+    part = os.path.join(d, "part-00000.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert load_table(spark, tmp, "t").columns == ["a"]
+    dir_mtime = os.stat(d).st_mtime_ns
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), part)
+    assert os.stat(d).st_mtime_ns == dir_mtime  # the directory did not move
+    tables._SCHEMA_CACHE["/elsewhere.parquet"] = ("app-gone", 0, None)
+    df = load_table(spark, tmp, "t")
+    assert df.columns == ["a", "b"]
+    assert df.collect()[0]["b"] == "x"
+    assert "/elsewhere.parquet" not in tables._SCHEMA_CACHE
