@@ -4,6 +4,11 @@ Prints exactly one JSON line:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
 "queries_cold": {...}, "value_cold": ..., "sf": ...}``
 
+This module is also the one home of the timing protocol: :func:`timed_runs`
+(the rep loop), :func:`cell` (one fresh JVM per tree, run as ``python
+bench.py --cell TREE SF NAMES REPS CPUS``) and :func:`interleaved`
+(cells over several git trees in alternating order, min per query).
+
 Headline set spans the engine's main cost shapes: grouped aggregation
 (q01), the flagship CTE+window reduction (q20) and its skew-safe
 approx-quantile variant (q104 — q56 is that plan's driver-checked
@@ -67,6 +72,31 @@ HEADLINE = [
 ]
 
 
+def timed_runs(spark, fn, sf_dir: str, reps: int) -> list[float]:
+    """The timing protocol, the one copy of it: per rep, clearCache, then
+    ``release_all``, then ``fn(spark, sf_dir)`` written to the noop sink
+    and timed with perf_counter. Returns the ``reps`` walls in seconds.
+
+    Isolation runs before EVERY rep (not once per query — r04 review):
+    rep 1's operator-internal persists otherwise stay in the cache
+    manager, rep 2's identical plan gets plan-matched to the cached
+    blocks, and the rep reports a cache-hit read with the index build
+    skipped. clearCache drops persisted blocks (and the cross-query leak
+    that measured q58 at 18 s in-session vs 4.5 s standalone);
+    release_all additionally frees localCheckpoint blocks (the CC
+    rounds), which clearCache cannot reach."""
+    from citibike_analysis_spark.cache import release_all
+
+    runs = []
+    for _ in range(reps):
+        spark.catalog.clearCache()
+        release_all()
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(time.perf_counter() - t0)
+    return runs
+
+
 # --------------------------------------------------------------------------
 # x10 cell (r15, r14 VERDICT #6): at sf0.1 EVERY headline query ran
 # faster at 8 cores than 32 (scaling ratios 0.36-0.93) — the bench was
@@ -95,9 +125,7 @@ def x10_block(spark, steady: dict, cold: dict) -> dict:
     bench: any error is reported in the returned info block."""
     import shutil
     import tempfile
-    import time as _time
 
-    from citibike_analysis_spark.cache import release_all
     from citibike_analysis_spark.plans import all_queries
 
     sys.path.insert(0, os.path.join(REPO, "scripts"))
@@ -108,7 +136,7 @@ def x10_block(spark, steady: dict, cold: dict) -> dict:
 
         import scale_rehearsal as sr
 
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         for t, gen in (
             ("documents", sr.gen_documents(X10_DOCS, seed=7)),
             ("embeddings", sr.gen_embeddings(X10_VECS, seed=7)),
@@ -116,24 +144,17 @@ def x10_block(spark, steady: dict, cold: dict) -> dict:
             _pq.write_table(
                 gen,
                 os.path.join(work, f"{t}.parquet"),
-                # ~128 row groups so the scan carries byte-sized splits
-                # (the single-row-group shape would serialize every
-                # pipeline above the scan — cluster_rehearsal.py's
-                # convention)
-                row_group_size=max(1024, (len(gen) + 127) // 128),
+                # at least 128 row groups per table (50k docs: 129 of
+                # 390 rows; 20k vecs: 129 of 156), so the scan's byte
+                # splits each hold data and carry at least core-count
+                # tasks; a single row group would serialize every
+                # pipeline above the scan
+                row_group_size=max(1, len(gen) // 128),
             )
-        info["gen_sec"] = round(_time.perf_counter() - t0, 2)
+        info["gen_sec"] = round(time.perf_counter() - t0, 2)
         specs = all_queries()
         for name in X10_QUERIES:
-            runs = []
-            for _ in range(2):
-                spark.catalog.clearCache()
-                release_all()
-                t0 = _time.perf_counter()
-                specs[name].fn(spark, work).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(_time.perf_counter() - t0)
+            runs = timed_runs(spark, specs[name].fn, work, 2)
             cold[f"x10_{name}"] = round(runs[0], 3)
             steady[f"x10_{name}"] = round(min(runs), 3)
     except Exception as exc:  # noqa: BLE001 - report, never sink the bench
@@ -183,38 +204,127 @@ CANARY_QUERIES = (
     "q90_encode_documents",
 )
 
-_CANARY_SCRIPT = r"""
-import json, sys, time
-tree, sf_dir, names, reps = sys.argv[1], sys.argv[2], sys.argv[3].split(","), int(sys.argv[4])
-sys.path.insert(0, tree)
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master(f"local[{sys.argv[5]}]")
-         .config("spark.sql.shuffle.partitions", sys.argv[5])
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-from citibike_analysis_spark.plans import all_queries
-try:
-    from citibike_analysis_spark.cache import release_all
-except ImportError:  # pre-r04 trees (the canary's prev side) have no cache module
-    def release_all():
-        pass
-specs = all_queries()
-out = {}
-for name in names:
-    if name not in specs:
-        continue
-    specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    runs = []
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        release_all()  # clearCache misses localCheckpoint blocks (CC rounds)
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 3))
-    out[name] = min(runs)
-print(json.dumps(out))
-spark.stop()
-"""
+
+def cell(tree: str, sf_dir: str, names: list[str], reps: int, cpus: str) -> dict:
+    """One fresh-JVM cell: time ``names`` from the package in ``tree``
+    (one untimed warmup, then min of ``reps`` under :func:`timed_runs`)
+    on a vanilla ``local[cpus]`` session. Queries the tree does not
+    register are skipped. Run as ``python bench.py --cell TREE SF NAMES
+    REPS CPUS``; it prints the result as one JSON line."""
+    # sys.path[0] is this file's checkout: put TREE first, or the cell
+    # would time this checkout's package under the other tree's label
+    sys.path.insert(0, tree)
+    import citibike_analysis_spark
+
+    pkg = os.path.realpath(citibike_analysis_spark.__file__)
+    if not pkg.startswith(os.path.join(os.path.realpath(tree), "")):
+        raise RuntimeError(f"cell imported {pkg}, not the package in {tree}")
+    from pyspark.sql import SparkSession
+
+    from citibike_analysis_spark.plans import all_queries
+
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    specs = all_queries()
+    out = {
+        name: round(min(timed_runs(spark, specs[name].fn, sf_dir, reps + 1)[1:]), 3)
+        for name in names
+        if name in specs
+    }
+    spark.stop()
+    return out
+
+
+def _run_cell(tree: str, sf_dir: str, names, reps: int, cpus: str) -> dict:
+    import subprocess
+
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), "--cell", tree,
+         sf_dir, ",".join(names), str(reps), cpus],
+        capture_output=True, text=True, timeout=1800,
+    )
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        # surface the subprocess's own diagnostics — an empty stdout
+        # otherwise dies as an unactionable IndexError (r04 review)
+        raise RuntimeError(
+            f"cell subprocess rc={out.returncode}: " + out.stderr.strip()[-300:]
+        )
+    return json.loads(lines[-1])
+
+
+def interleaved(
+    refs: dict, sf_dir: str, names, reps: int, cpus: str, passes: int = 2
+) -> dict:
+    """Time ``names`` in several git trees, ``{label: ref}`` (ref None =
+    this checkout, anything else a detached worktree), one fresh-JVM
+    :func:`cell` per (tree, pass).
+
+    Passes alternate the tree order and each query keeps its min over
+    passes, so a mid-run host drift lands inside every tree's record
+    (r15 measurement fix, stated in OPTIMIZATION_r15.md: a single
+    prev-then-head pass read head 1.3-1.9x on every canary including
+    untouched code; a 3-pass interleaved re-run on the same host read
+    0.83-1.04x). Returns ``{"passes": [{label: {q: s}}], "min": {label:
+    {q: s}}}``; only same-run ratios between labels are meaningful."""
+    import subprocess
+    import tempfile
+
+    trees: dict[str, str] = {}
+    try:
+        for label, ref in refs.items():
+            if ref is None:
+                trees[label] = REPO
+                continue
+            trees[label] = tempfile.mkdtemp(prefix=f"bench_{label}_")
+            subprocess.run(
+                ["git", "worktree", "add", "--detach", "-f", trees[label], ref],
+                cwd=REPO, check=True, capture_output=True, timeout=60,
+            )
+        results: list[dict] = []
+        mins: dict[str, dict] = {label: {} for label in trees}
+        for p in range(passes):
+            res: dict[str, dict] = {}
+            for label in list(trees)[:: -1 if p % 2 else 1]:
+                res[label] = _run_cell(trees[label], sf_dir, names, reps, cpus)
+                for q, v in res[label].items():
+                    mins[label][q] = min(mins[label].get(q, v), v)
+            results.append(res)
+    finally:
+        for tree in trees.values():
+            if tree != REPO:
+                subprocess.run(
+                    ["git", "worktree", "remove", "--force", tree],
+                    cwd=REPO, capture_output=True, timeout=60,
+                )
+    return {"passes": results, "min": mins}
+
+
+def previous_round() -> tuple[str, int] | None:
+    """(sha, N) of the newest ``round N:`` commit that is NOT HEAD: right
+    after the driver commits 'round N', HEAD == that marker and the
+    canary would time HEAD against HEAD, certifying ~1.0 without ever
+    running the previous round's code (r04 review)."""
+    import re
+    import subprocess
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", *args],
+            capture_output=True, text=True, cwd=REPO, check=True, timeout=30,
+        ).stdout
+
+    head = git("rev-parse", "HEAD").strip()
+    log = git("log", "--pretty=%H %s")
+    for m in re.finditer(r"^([0-9a-f]{40}) round (\d+):", log, re.M):
+        if m.group(1) != head:
+            return m.group(1), int(m.group(2))
+    return None
 
 
 def wait_for_idle(
@@ -287,97 +397,34 @@ def host_block() -> dict:
     return info
 
 
-def _time_tree(tree: str, sf_dir: str, cpus: str, reps: int) -> dict:
-    import subprocess
-
-    out = subprocess.run(
-        [sys.executable, "-c", _CANARY_SCRIPT, tree, sf_dir,
-         ",".join(CANARY_QUERIES), str(reps), cpus],
-        capture_output=True, text=True, timeout=600,
-    )
-    lines = out.stdout.strip().splitlines()
-    if out.returncode != 0 or not lines:
-        # surface the subprocess's own diagnostics — an empty stdout
-        # otherwise dies as an unactionable IndexError (r04 review)
-        raise RuntimeError(
-            f"canary subprocess rc={out.returncode}: "
-            + out.stderr.strip()[-300:]
-        )
-    return json.loads(lines[-1])
-
-
 def canary_block(sf_dir: str, cpus: str, reps: int = 3) -> dict:
-    """Time the previous round's committed code AND HEAD on today's host
-    under an identical fresh-subprocess protocol.
+    """Time the previous round's committed code AND this checkout on
+    today's host under an identical fresh-subprocess protocol.
 
     The main loop's steady numbers come from a long-lived, fully
     JIT-warmed JVM; a canary subprocess is colder. Comparing the main
     numbers against a cold canary bakes a warmth bias into the ratio
     (measured ~2x on q41), so BOTH trees run the same one-warmup,
-    min-of-N fresh-JVM protocol and only prev-vs-head is compared.
-    Never fails the bench: any error is reported in the block.
+    min-of-N fresh-JVM cells in two interleaved passes, and only
+    prev-vs-head is compared. Never fails the bench: any error is
+    reported in the block.
     """
-    import re
-    import subprocess
-    import tempfile
-
     try:
-        log = subprocess.run(
-            ["git", "log", "--pretty=%H %s"],
-            capture_output=True, text=True, cwd=REPO, check=True, timeout=30,
-        ).stdout
-        head = subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            capture_output=True, text=True, cwd=REPO, check=True, timeout=30,
-        ).stdout.strip()
-        # newest 'round N:' marker that is NOT HEAD itself: right after
-        # the driver commits 'round N', HEAD == that marker and the
-        # canary would time HEAD against HEAD, certifying ~1.0 without
-        # ever running the previous round's code (r04 review)
-        sha = rnd = None
-        for m in re.finditer(r"^([0-9a-f]{40}) round (\d+):", log, re.M):
-            if m.group(1) != head:
-                sha, rnd = m.group(1), int(m.group(2))
-                break
-        if sha is None:
+        prev = previous_round()
+        if prev is None:
             return {"err": "no previous-round commit distinct from HEAD"}
-        wt = tempfile.mkdtemp(prefix="bench_canary_")
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", "-f", wt, sha],
-            cwd=REPO, check=True, capture_output=True, timeout=60,
-        )
-        try:
-            # INTERLEAVED passes (r15 measurement fix, stated in
-            # OPTIMIZATION_r15.md): the old single prev-then-head pass
-            # put all of a host swing on one side — BENCH r15's first
-            # run read head 1.3-1.9x on every canary INCLUDING
-            # untouched code, and a 3-pass interleaved re-run on the
-            # same host read 0.83-1.04x. Two passes alternating tree
-            # order, min per tree: a drift lands inside both records.
-            prev: dict = {}
-            head: dict = {}
-            for p in range(2):
-                cells = [("prev", wt), ("head", REPO)]
-                if p % 2:
-                    cells.reverse()
-                for label, tree in cells:
-                    t = _time_tree(tree, sf_dir, cpus, reps)
-                    acc = prev if label == "prev" else head
-                    for q, v in t.items():
-                        acc[q] = min(acc.get(q, v), v)
-        finally:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", wt],
-                cwd=REPO, capture_output=True, timeout=60,
-            )
+        sha, rnd = prev
+        mins = interleaved(
+            {"prev": sha, "head": None}, sf_dir, CANARY_QUERIES, reps, cpus
+        )["min"]
         return {
             "ref": sha[:9],
             "round": rnd,
             "reps": reps,
             "passes": 2,
             "interleaved": True,
-            "prev": prev,
-            "head": head,
+            "prev": mins["prev"],
+            "head": mins["head"],
         }
     except Exception as exc:  # noqa: BLE001 - canary must never sink the bench
         return {"err": f"{type(exc).__name__}: {exc}"[:300]}
@@ -838,7 +885,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from citibike_analysis_spark.cache import release_all
     from citibike_analysis_spark.plans import all_queries
     from citibike_analysis_spark.session import get_spark
 
@@ -861,24 +907,7 @@ def main() -> None:
     steady: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in HEADLINE:
-        runs = []
-        for _ in range(2):
-            # Isolation before EVERY rep (not once per query — r04
-            # review): rep 1's operator-internal persists otherwise stay
-            # in the cache manager, rep 2's identical plan gets
-            # plan-matched to the cached blocks, and "steady" reports a
-            # cache-hit read with the index build skipped — a different
-            # quantity than the canary measures. clearCache drops
-            # persisted blocks (and the cross-query leak that measured
-            # q58 at 18 s in-session vs 4.5 s standalone); release_all
-            # additionally frees localCheckpoint blocks (the CC rounds),
-            # which clearCache cannot reach.
-            spark.catalog.clearCache()
-            release_all()
-            t0 = time.perf_counter()
-            df = specs[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+        runs = timed_runs(spark, specs[name].fn, sf_dir, 2)
         cold[name] = round(runs[0], 3)
         steady[name] = round(min(runs), 3)
 
@@ -941,4 +970,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    if sys.argv[1:2] == ["--cell"]:
+        tree, sf_dir, names, reps, cpus = sys.argv[2:7]
+        print(json.dumps(cell(tree, sf_dir, names.split(","), int(reps), cpus)))
+    else:
+        sys.exit(main())

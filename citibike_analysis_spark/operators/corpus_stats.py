@@ -35,7 +35,8 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     explode is the CPU-heavy stage and a single-row-group source runs it
     on one core. ``freq`` deliberately stays UNPERSISTED: its only
     duplicated consumer is the 1-row total, and the measured A/B
-    (ab_env, reuse=persist vs none, fresh-JVM min-of-3) read the persist
+    (scripts/ab_env.py, since removed, recover it from commit fb98187;
+    reuse=persist vs none, fresh-JVM min-of-3) read the persist
     10% SLOWER — the redundant branch evaluation races on otherwise-idle
     cores while the persist adds a barrier + cache write (the same
     economics as Finding 1's lazy-default decision in

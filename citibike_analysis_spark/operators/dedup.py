@@ -122,7 +122,8 @@ def _shingle_intersections(
     # with two hashpartitioning(_h) exchanges and no ReusedExchange.
     # Persisting the capped index runs the window once; at corpus scale
     # that saves a full index exchange+window pass per query.
-    # Interleaved fresh-JVM min-of-5 (ab_env, sf0.1, local[32]):
+    # Interleaved fresh-JVM min-of-5 (scripts/ab_env.py, since removed;
+    # recover it from commit fb98187; sf0.1, local[32]):
     # q34 1.054→0.640 s (0.61×), q61 1.898→1.230 (0.65×),
     # q46 3.334→2.838 (0.85×), q92 0.809→0.791 (0.98×). Persisting
     # ``sizes`` as well was measured and REJECTED (same protocol:
@@ -546,9 +547,11 @@ def contamination_flags(
 def bloom_m_bits(n_items: int, bits_per_item: int = 16) -> int:
     """Bitmap size (bits) for the bloom gate: ``bits_per_item`` per
     benchmark gram, rounded up to a power of two, floor 1024. Exported
-    so instruments (``scripts/ab_bloom_gate.py``) measure the EXACT
-    filter the operator ships instead of re-deriving the sizing inline
-    (r09 ADVICE — an inline copy silently desynchronizes).
+    so instruments (``tests/test_properties.py``; formerly
+    ``scripts/ab_bloom_gate.py``, removed, recover it from commit
+    fb98187) measure the EXACT filter the operator ships instead of
+    re-deriving the sizing inline (r09 ADVICE — an inline copy silently
+    desynchronizes).
 
     ``n_items <= 0`` returns the 1024 floor (r10 ADVICE: the operator
     guards its own empty-benchmark case before calling, but the helper
@@ -617,7 +620,8 @@ def contamination_flags_bloom(
     never collected, joined, or shuffled before the gate).
 
     Measured regime (r10 single-JVM + r11 process-boundary cells,
-    `scripts/ab_bloom_gate.py` + SCALE.md): on a SINGLE NODE prefer
+    `scripts/ab_bloom_gate.py`, since removed, recover it from commit
+    fb98187; the walls are in SCALE.md): on a SINGLE NODE prefer
     :func:`contamination_flags` — the gate loses a flat ~1.35–1.39×
     to the hashed exact shuffle join at both 11M and 111M probe
     grams, because a local[N] shuffle of 8-byte longs is memory-speed

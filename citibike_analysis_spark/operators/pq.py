@@ -79,20 +79,14 @@ def _explode_subvectors(
     vec: str,
     m: int,
     dsub: int,
-    carry: list[str] | None = None,
 ) -> DataFrame:
     """(id, vec) → (id, sub_j, _sv): one row per contiguous subspace
-    slice. Pure array expressions (slice positions are 1-based).
-    ``carry`` columns ride the explode unchanged (a few scalar bytes
-    per row — how `attach_pq_codes` keeps the lists' cid without an
-    n-row re-join after encoding)."""
+    slice. Pure array expressions (slice positions are 1-based)."""
     slices = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda j: F.slice(F.col(vec), j * F.lit(dsub) + 1, dsub),
     )
-    return df.select(
-        idname, *(carry or []), F.posexplode(slices).alias("sub_j", "_sv")
-    )
+    return df.select(idname, F.posexplode(slices).alias("sub_j", "_sv"))
 
 
 def _sqdist(a: Column, b: Column) -> Column:
@@ -115,15 +109,11 @@ def _cb_df(spark, codebooks) -> DataFrame:
     return spark.createDataFrame(rows, "sub_j: int, cid: int, _cb: array<double>")
 
 
-def _assign_codes(
-    sub: DataFrame, idname: str, spark, codebooks, carry: list[str] | None = None
-) -> DataFrame:
+def _assign_codes(sub: DataFrame, idname: str, spark, codebooks) -> DataFrame:
     """(id, sub_j, _sv) → (id, sub_j, cid, _sv): per-subspace nearest
     centroid under squared-L2, ties on cid (min over (dist, cid)
     structs — the `_assign_nearest` trick with the euclidean metric).
-    The codebook frame is m × ksub rows — always broadcast. ``carry``
-    columns are per-id constants (any_value through the aggregate)."""
-    carry = carry or []
+    The codebook frame is m × ksub rows — always broadcast."""
     scored = sub.join(F.broadcast(_cb_df(spark, codebooks)), "sub_j").withColumn(
         "_d", F.round(_sqdist(F.col("_sv"), F.col("_cb")), 9)
     )
@@ -132,9 +122,8 @@ def _assign_codes(
         .agg(
             F.min(F.struct(F.col("_d"), F.col("cid"))).alias("_m"),
             F.any_value("_sv").alias("_sv"),
-            *[F.any_value(c).alias(c) for c in carry],
         )
-        .select(idname, "sub_j", F.col("_m.cid").alias("cid"), "_sv", *carry)
+        .select(idname, "sub_j", F.col("_m.cid").alias("cid"), "_sv")
     )
 
 

@@ -32,109 +32,10 @@ class QuerySpec:
     survey: str
 
 
-# Driver-window rotation: the driver records correctness for the FIRST
-# ~50 registry entries only (observed cap, rounds 1-3), so iteration
-# order decides which queries ever get a driver-signed row. Order:
-#   1. three relational sentinels (green driver rounds banked every
-#      round; they anchor the file against wholesale regressions),
-#   2. queries with no GREEN row in ANY committed CORRECTNESS_r*.json —
-#      oracle-backed first (hash-match is the strong signal), then
-#      designed rows-only. A row counts as green only if it actually
-#      verified (hash match, or rows+schema match, or a non-crashed
-#      rows-only check for a query that is STILL registered without an
-#      oracle) — crashed/failed rows leave the query in the unsigned
-#      pool so it is retried, and a query that has since GAINED an
-#      oracle re-enters the window for the stronger check (r03 lesson:
-#      q82/q90 crashed the driver canonicalizer and the old ever-SEEN
-#      predicate would have rotated them out of verification forever),
-#   3. everything already green, least-recently-verified round first —
-#      so residual window slots continuously re-verify the stalest
-#      signatures instead of always the same registration prefix.
-# Reading the committed correctness files at call time makes the window
-# rotate automatically each round until every query has been signed.
-_SENTINELS = ("q01_pricing_summary", "q20_interesting_suppliers", "q23_round_half_even_hour")
-
-# Signature epochs: when a registered query's SEMANTICS (implementation
-# + oracle) are replaced under the same key, green rows from earlier
-# rounds verified the OLD query and must not count as signatures for
-# the new one — otherwise the rewritten query rides stale greens into
-# the already-signed tail and ships unverified (the rename/replace
-# variant of the r03 rotate-out-forever bug). Map: query -> first round
-# whose driver rows may sign it.
-_EPOCH = {
-    # q103 epoch history (r09 entry below is current): r04 re-registered
-    # as the production θ=0.9 auto-bits re-ingest form (r01-r03 greens
-    # verified the θ=0.45 form, now q105); r05 re-registered as the
-    # fixed-batch admission form (earlier greens verified the
-    # SF-proportional loose-banding form, now q113); r08 master-keyed
-    # pair dot.
-    # r07: cut swapped to percentile_approx (the declared 100 TB form,
-    # r06 verdict task #3); earlier greens verified the exact
-    # interpolated cut, which now lives inside q118's audit leg
-    "q71_quality_percentile_gate": 7,
-    "q116_importance_resample": 7,
-    # r07: q106's floor became size-keyed (flag column renamed — r06's
-    # green verified the flat 0.30 bound, itself an r06 tightening of
-    # the original 0.25; the r09 entry below is current); q127's
-    # deterministic flag now asserts LAYOUT-independence (second sample
-    # over a repartitioned frame — the r06 green verified the weaker
-    # same-layout claim)
-    "q127_cluster_balanced_sample_audit": 7,
-    # r08: exact-regime guard now asserts the sketch's sticky `pruned`
-    # flag instead of the final counter-set size (the r08 ADVICE hole:
-    # pruning shrinks the set back below capacity, so the size check
-    # passed on already-lower-bounded counts); earlier greens verified
-    # the plan under the blind guard
-    "q121_streaming_heavy_hitters_replay": 8,
-    # r08: verify-stage per-pair dot became master-keyed (Arrow einsum
-    # on multi-process masters, warm-JIT fold on local[N] — outputs
-    # pytest-pinned identical at the 6-decimal rounding); r09 bump
-    # below supersedes this entry.
-    # r09: rank windows and θ gates in the four pick_pair_dot
-    # consumers (brute_force_topk, near_duplicate_embeddings,
-    # semantic_dedup_pairs, incremental_embedding_dedup) now compare
-    # the ROUNDED cosine, and every affected oracle gates/ranks
-    # round(sim, 6) in lockstep — the r08 ADVICE hole: unrounded
-    # comparisons made knife-edge rank-k picks and θ admissions
-    # depend on the fold-vs-Arrow summation order. Earlier greens
-    # verified the unrounded-compare forms.
-    "q38_ann_topk": 9,
-    "q39_embedding_near_dup": 9,
-    "q77_semantic_dedup": 9,
-    "q103_incremental_embedding_dedup": 9,
-    "q105_neardup_calibration": 9,
-    "q106_ann_lsh_recall_audit": 9,
-    "q109_semdedup_precision_audit": 9,
-    "q113_incremental_dedup_calibration": 9,
-    # r11: the IVF verify stage adopted the master+size-keyed per-pair
-    # dot and the rounded-rank convention (the same r08/r09 change the
-    # LSH/near-dup families made in epoch 9) — earlier greens verified
-    # the interpreted-fold, unrounded-rank form. The audit moves with
-    # its query (_AUDIT_OF rule).
-    "q49_ann_ivf": 11,
-    "q107_ann_ivf_recall_audit": 11,
-    # r13: q138 gained the euclidean drift axis + a negated leg (three
-    # new pinned booleans — r12 greens verified the cosine-only form);
-    # q139's coding_beats_variance bar tightened to the mean
-    # PER-DIMENSION var_pop (r12 ADVICE: the pooled variance is that
-    # plus the variance of per-dim means, a weaker bar) and its
-    # codebooks train on a 20% sample; q140/q141 codebooks likewise
-    # sample-trained (different codebooks → different shortlists, the
-    # recall floors re-measured before pinning).
-    # r14: q138 gained the THIRD drift axis (assignment-share TV) — a
-    # mass-shift leg both global means are provably blind to, a
-    # measured negation refutation leg, and share_tv==0 pins on the
-    # same-dist/radial legs; r13 greens verified the two-axis form
-    "q138_ivf_append_drift_audit": 14,
-    "q139_pq_reconstruction_audit": 13,
-    "q140_pq_rerank_recall_audit": 13,
-    "q141_ivfpq_recall_audit": 13,
-}
-
 # Designed no-oracle queries and the hash-verified audit that carries
 # their value check. Invariant (pinned by tests/test_registry.py):
-# bumping the epoch of a no-oracle query must bump its paired audit's
-# epoch at least as far — otherwise the audit keeps signing the OLD
+# bumping the epoch (``__spark_entry__._EPOCH``) of a no-oracle query
+# must bump its paired audit's epoch at least as far — otherwise the audit keeps signing the OLD
 # semantics while the query itself re-enters the window under the new
 # ones (q77→q109 moved together in r09; this map encodes that rule).
 _AUDIT_OF = {
@@ -150,86 +51,10 @@ _AUDIT_OF = {
 }
 
 
-def _classify_row(row: object) -> str | None:
-    """Classify one driver correctness row: ``"oracle"`` (hash match, or
-    rows+schema match), ``"rows_only"`` (designed no-oracle check that
-    completed and produced rows), or ``None`` (crashed / failed / not a
-    row — NOT a signature; the query must be retried)."""
-    if not isinstance(row, dict):
-        return None
-    if bool(row.get("hash_match")):
-        return "oracle"
-    # weaker driver check where the value hash was not computed at all —
-    # a computed-but-False hash is a VALUE MISMATCH, never a signature
-    if (
-        row.get("hash_match") is None
-        and bool(row.get("rows_match"))
-        and bool(row.get("schema_match"))
-    ):
-        return "oracle"
-    if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-        return "rows_only"
-    return None
-
-
-def _driver_green() -> dict[str, tuple[int, bool]]:
-    """Per query: (latest round with a green driver row, whether any
-    green row was a real oracle verification rather than rows-only).
-    See :func:`_classify_row` for what counts as green.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    green: dict[str, tuple[int, bool]] = {}
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(f) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if rnd < _EPOCH.get(name, 0):
-                continue  # row predates a semantic replacement of this key
-            kind = _classify_row(row)
-            if kind is None:
-                continue
-            prev = green.get(name, (-1, False))
-            green[name] = (max(prev[0], rnd), prev[1] or kind == "oracle")
-    return green
-
-
 def all_queries() -> dict[str, QuerySpec]:
+    """Every registered query in registration order: ``relational.QUERIES``
+    then ``llm.QUERIES``. The driver-window order lives in
+    ``__spark_entry__.queries()``; this function opens no file."""
     from citibike_analysis_spark.plans import llm, relational
 
-    reg: dict[str, QuerySpec] = {}
-    reg.update(relational.QUERIES)
-    reg.update(llm.QUERIES)
-
-    green = _driver_green()
-
-    def signed(n: str) -> bool:
-        if n not in green:
-            return False
-        _, oracle_green = green[n]
-        # rows-only signature only counts while the query still has no
-        # oracle; once an oracle exists, the stronger check is pending.
-        return oracle_green or reg[n].oracle is None
-
-    order = {n: i for i, n in enumerate(reg)}
-    unsigned = [n for n in reg if not signed(n) and n not in _SENTINELS]
-    tail = sorted(
-        (n for n in reg if signed(n) and n not in _SENTINELS),
-        key=lambda n: (green[n][0], order[n]),
-    )
-    ordered = (
-        [n for n in _SENTINELS if n in reg]
-        + [n for n in unsigned if reg[n].oracle is not None]
-        + [n for n in unsigned if reg[n].oracle is None]
-        + tail
-    )
-    return {n: reg[n] for n in ordered}
+    return {**relational.QUERIES, **llm.QUERIES}

@@ -204,12 +204,12 @@ def ensure_corpus(work: str, scale: str = "x10", dim: int = 64) -> str:
             # whole table into ONE row group, and Spark cannot split a
             # parquet file below row-group granularity — every
             # pre-shuffle scan of the rehearsal corpus ran single-task
-            # (the dim-512 x100 ab_adc cell spent ~70 min at load ~1
-            # on exactly this). 128 row groups lets a local[32] scan
-            # fan out fully at every rehearsal scale.
-            pq.write_table(
-                gen, tmp, row_group_size=max(1024, (len(gen) + 127) // 128)
-            )
+            # (the dim-512 x100 cell of scripts/ab_adc.py, since
+            # removed, in commit fb98187, spent ~70 min at load ~1
+            # on exactly this). At least 128 row groups (the bench x10
+            # cell's sizing) lets a local[32] scan fan out fully at
+            # every rehearsal scale.
+            pq.write_table(gen, tmp, row_group_size=max(1, len(gen) // 128))
             os.replace(tmp, os.path.join(d, f"{t}.parquet"))
     return d
 

@@ -2,8 +2,8 @@
 
 Usage: python scripts/profile_query.py <query> [reps]
 
-Runs the query under the bench protocol (noop sink, clearCache +
-release_all between reps) with the Spark UI enabled, then dumps every
+Runs the query under ``bench.timed_runs`` (noop sink, clearCache +
+release_all before each rep) with the Spark UI enabled, then dumps every
 job of the LAST rep with its duration, description and stage shuffle
 volumes from the REST API — the local stand-in for guide §1.1's
 "open the UI, find the slowest stage"."""
@@ -11,7 +11,6 @@ volumes from the REST API — the local stand-in for guide §1.1's
 import json
 import os
 import sys
-import time
 import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,7 +25,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from citibike_analysis_spark.cache import release_all
+    from bench import timed_runs
     from citibike_analysis_spark.plans import all_queries
     from citibike_analysis_spark.session import tune
 
@@ -43,17 +42,16 @@ def main() -> int:
     tune(spark)
     spec = all_queries()[name]
 
-    walls = []
     first_job = 0
-    for rep in range(reps):
-        spark.catalog.clearCache()
-        release_all()
+
+    def marked(spark, sf_dir):
+        # first job id of the rep, so only the last rep's jobs are dumped
+        nonlocal first_job
         st = spark.sparkContext.statusTracker()
         first_job = (max(st.getJobIdsForGroup() or [-1])) + 1
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        walls.append(round(time.perf_counter() - t0, 3))
+        return spec.fn(spark, sf_dir)
+
+    walls = [round(w, 3) for w in timed_runs(spark, marked, sf_dir, reps)]
 
     app_id = spark.sparkContext.applicationId
     base = f"http://localhost:4049/api/v1/applications/{app_id}"

@@ -2,14 +2,14 @@
 
 Usage: python scripts/profile_sql.py <query>
 
-Runs the query once (noop sink) with the UI on, then prints every node
-of the final adaptive plan with its key metrics (output rows, time,
-shuffle bytes) — the script form of guide §7.1's SQL tab."""
+Runs the query once under ``bench.timed_runs`` (noop sink) with the UI
+on, then prints every node of the final adaptive plan with its key
+metrics (output rows, time, shuffle bytes) — the script form of guide
+§7.1's SQL tab."""
 
 import json
 import os
 import sys
-import time
 import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -23,7 +23,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from citibike_analysis_spark.cache import release_all
+    from bench import timed_runs
     from citibike_analysis_spark.plans import all_queries
     from citibike_analysis_spark.session import tune
 
@@ -39,9 +39,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     tune(spark)
     spec = all_queries()[name]
-    t0 = time.perf_counter()
-    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
+    (wall,) = timed_runs(spark, spec.fn, sf_dir, 1)
 
     app_id = spark.sparkContext.applicationId
     base = f"http://localhost:4048/api/v1/applications/{app_id}"

@@ -677,7 +677,8 @@ def _pq_encode_fold(corpus, codebooks, carry_cols=None):
     subvectors, broadcast-join the codebooks for a squared-L2 argmin per
     subspace, then regroup the codes per vector with |x̂| from the
     driver-side squared norms of the picked entries. The Arrow encode
-    must reproduce it byte for byte."""
+    must reproduce it byte for byte. ``carry_cols`` are re-attached by a
+    join on ``vec_id`` after the codes are regrouped."""
     from citibike_analysis_spark.operators.pq import (
         _assign_codes,
         _explode_subvectors,
@@ -686,13 +687,10 @@ def _pq_encode_fold(corpus, codebooks, carry_cols=None):
 
     m = len(codebooks)
     dsub = len(codebooks[0][0][1])
-    carry = carry_cols or []
     spark = corpus.sparkSession
-    c = corpus.select(
-        "vec_id", *carry, as_double(F.col("embedding")).alias("_v")
-    )
-    sub = _explode_subvectors(c, "vec_id", "_v", m, dsub, carry=carry)
-    assigned = _assign_codes(sub, "vec_id", spark, codebooks, carry=carry)
+    c = corpus.select("vec_id", as_double(F.col("embedding")).alias("_v"))
+    sub = _explode_subvectors(c, "vec_id", "_v", m, dsub)
+    assigned = _assign_codes(sub, "vec_id", spark, codebooks)
     sq_df = spark.createDataFrame(
         [
             (j, cid, sum(x * x for x in v))
@@ -701,7 +699,7 @@ def _pq_encode_fold(corpus, codebooks, carry_cols=None):
         ],
         "sub_j: int, cid: int, _sq: double",
     )
-    return (
+    encoded = (
         assigned.join(F.broadcast(sq_df), ["sub_j", "cid"])
         .groupBy("vec_id")
         .agg(
@@ -710,9 +708,11 @@ def _pq_encode_fold(corpus, codebooks, carry_cols=None):
                 lambda s: s["cid"],
             ).alias("codes"),
             F.round(F.sqrt(F.sum("_sq")), 9).alias("recon_norm"),
-            *[F.any_value(c).alias(c) for c in carry],
         )
     )
+    if carry_cols:
+        encoded = encoded.join(corpus.select("vec_id", *carry_cols), "vec_id")
+    return encoded
 
 
 class TestR14ArrowEncodeParity:

@@ -1,6 +1,6 @@
-"""Driver-window rotation invariants (plans/__init__.py).
+"""Driver-window rotation invariants (``__spark_entry__.queries()``).
 
-The driver signs only the first ~50 ``all_queries()`` entries per round,
+The driver signs only the first ~50 ``queries()`` entries per round,
 so the ordering logic IS the verification schedule. r03 lesson: two
 queries crashed the driver's canonicalizer, and the old ever-SEEN
 predicate would have rotated them permanently out of the window. These
@@ -10,12 +10,14 @@ must hold for ANY state of the committed CORRECTNESS_r*.json files.
 
 from __future__ import annotations
 
-from citibike_analysis_spark.plans import (
+from __spark_entry__ import (
+    _EPOCH,
     _SENTINELS,
     _classify_row,
     _driver_green,
-    all_queries,
+    queries,
 )
+from citibike_analysis_spark.plans import _AUDIT_OF, all_queries
 
 WINDOW = 50
 
@@ -76,7 +78,7 @@ def test_classify_garbage_is_not_green():
 
 
 def test_sentinels_lead_the_window():
-    names = list(all_queries())
+    names = list(queries())
     assert tuple(names[: len(_SENTINELS)]) == _SENTINELS
 
 
@@ -84,7 +86,7 @@ def test_unverified_oracle_queries_enter_the_window():
     """Every oracle-backed query WITHOUT a green oracle signature must
     sort into the driver's 50-entry window (else it never gets one)."""
     reg = all_queries()
-    names = list(reg)
+    names = list(queries())
     green = _driver_green()
     pending = [
         n
@@ -109,7 +111,9 @@ def test_signed_tail_is_least_recently_verified_first():
             return False
         return green[n][1] or reg[n].oracle is None
 
-    tail_rounds = [green[n][0] for n in reg if signed(n) and n not in _SENTINELS]
+    tail_rounds = [
+        green[n][0] for n in queries() if signed(n) and n not in _SENTINELS
+    ]
     assert tail_rounds == sorted(tail_rounds)
 
 
@@ -118,8 +122,6 @@ def test_epoch_invalidates_pre_replacement_signatures():
     under the same key must not ride green rows earned by the old
     meaning. q39 was re-registered in r04 (epoch 4); its r01-r03 greens
     verified the θ=0.45 form now living at q105."""
-    from citibike_analysis_spark.plans import _EPOCH
-
     green = _driver_green()
     for name, epoch in _EPOCH.items():
         got = green.get(name)
@@ -133,13 +135,11 @@ def test_epoch_reset_queries_reenter_the_window():
     earns an epoch-valid signature. For oracle-backed queries that means
     a hash green; for designed no-oracle queries (q77 et al.) a
     rows-only green IS the signature — mirroring ``signed()`` in
-    ``all_queries`` — so they legitimately rotate into the tail (r09
+    ``__spark_entry__`` — so they legitimately rotate into the tail (r09
     lesson: the unexempted form of this assert went red the moment the
     driver signed q77's rows-only row)."""
-    from citibike_analysis_spark.plans import _EPOCH
-
     reg = all_queries()
-    names = list(reg)
+    names = list(queries())
     green = _driver_green()
     for name in _EPOCH:
         if name not in names:
@@ -156,8 +156,6 @@ def test_no_oracle_epoch_bump_drags_its_audit():
     paired hash-verified audit at least as far — the audit carries the
     value check, so leaving it behind would keep signing the OLD
     semantics (q77→q109 moved together in r09; _AUDIT_OF encodes it)."""
-    from citibike_analysis_spark.plans import _AUDIT_OF, _EPOCH
-
     reg = all_queries()
     no_oracle = {n for n in reg if reg[n].oracle is None}
     # every designed no-oracle query has a declared audit, and the
@@ -175,13 +173,36 @@ def test_no_oracle_epoch_bump_drags_its_audit():
             )
 
 
+def test_driver_order_is_a_permutation_of_the_registry():
+    assert sorted(queries()) == sorted(all_queries())
+
+
+def test_registry_opens_no_file(monkeypatch):
+    """The engine registry is registration order only: it must not read
+    harness artifacts such as the CORRECTNESS_r*.json files."""
+    import builtins
+    import glob
+
+    expected = list(all_queries())
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"registry touched the filesystem: {args!r}")
+
+    monkeypatch.setattr(glob, "glob", refuse)
+    monkeypatch.setattr(builtins, "open", refuse)
+    reg = all_queries()
+    assert len(reg) == 146
+    assert list(reg) == expected
+
+
 def test_no_seed_dropping_sample_calls():
     """r10 lesson: ``df.sample(0.1, seed=7)`` binds 0.1 to
     ``withReplacement`` and PySpark's overload shim SILENTLY DROPS the
     seed — the plan gets a fresh random seed per DataFrame, so results
     differ across JVMs while looking stable within one (this burned
-    ab_bloom_gate's cross-mode row assert). Any seeded sample must pass
-    ``fraction=`` as a keyword; positional-fraction calls are banned
+    the since-removed ab_bloom_gate script's cross-mode row assert).
+    Any seeded sample must pass ``fraction=`` as a keyword;
+    positional-fraction calls are banned
     repo-wide (engine + scripts — harness determinism is what the A/B
     protocol rests on)."""
     import ast
