@@ -210,7 +210,12 @@ def cell(tree: str, sf_dir: str, names: list[str], reps: int, cpus: str) -> dict
     (one untimed warmup, then min of ``reps`` under :func:`timed_runs`)
     on a vanilla ``local[cpus]`` session. Queries the tree does not
     register are skipped. Run as ``python bench.py --cell TREE SF NAMES
-    REPS CPUS``; it prints the result as one JSON line."""
+    REPS CPUS``; it prints the result as one JSON line.
+
+    The session keeps Spark's default generated-class cache (100
+    entries), not ``session.CODEGEN_CACHE_ENTRIES``: the older trees a
+    cell times lack that constant, and every tree must run under the
+    same conf."""
     # sys.path[0] is this file's checkout: put TREE first, or the cell
     # would time this checkout's package under the other tree's label
     sys.path.insert(0, tree)
@@ -258,6 +263,35 @@ def _run_cell(tree: str, sf_dir: str, names, reps: int, cpus: str) -> dict:
     return json.loads(lines[-1])
 
 
+def read_load(stat_path: str = "/proc/stat") -> dict:
+    """The host's load now: ``load1``, the 1-minute loadavg, and
+    ``steal_s``, the hypervisor steal since boot in CPU-seconds (the 8th
+    value of the ``cpu`` line in ``stat_path``). A value the host does
+    not expose is left out."""
+    out: dict = {}
+    try:
+        out["load1"] = round(os.getloadavg()[0], 2)
+    except OSError:
+        pass
+    try:
+        with open(stat_path) as fh:
+            fields = fh.readline().split()
+        if fields[0] == "cpu":
+            out["steal_s"] = int(fields[8]) / os.sysconf("SC_CLK_TCK")
+    except (OSError, IndexError, ValueError):
+        pass
+    return out
+
+
+def load_delta(start: dict, end: dict) -> dict:
+    """One cell's load record from :func:`read_load` before and after
+    it: ``load1`` as [start, end] and the ``steal_s`` spent in between."""
+    rec = {"load1": [start.get("load1"), end.get("load1")]}
+    if "steal_s" in start and "steal_s" in end:
+        rec["steal_s"] = round(end["steal_s"] - start["steal_s"], 2)
+    return rec
+
+
 def interleaved(
     refs: dict, sf_dir: str, names, reps: int, cpus: str, passes: int = 2
 ) -> dict:
@@ -270,8 +304,11 @@ def interleaved(
     (r15 measurement fix, stated in OPTIMIZATION_r15.md: a single
     prev-then-head pass read head 1.3-1.9x on every canary including
     untouched code; a 3-pass interleaved re-run on the same host read
-    0.83-1.04x). Returns ``{"passes": [{label: {q: s}}], "min": {label:
-    {q: s}}}``; only same-run ratios between labels are meaningful."""
+    0.83-1.04x). Returns ``{"passes": [{label: {q: s}}], "load":
+    [{label: load_delta}], "min": {label: {q: s}}}``; only same-run
+    ratios between labels are meaningful, and ``load`` (loadavg and
+    steal per cell) tells a ratio measured under load from a
+    regression."""
     import subprocess
     import tempfile
 
@@ -287,14 +324,19 @@ def interleaved(
                 cwd=REPO, check=True, capture_output=True, timeout=60,
             )
         results: list[dict] = []
+        loads: list[dict] = []
         mins: dict[str, dict] = {label: {} for label in trees}
         for p in range(passes):
             res: dict[str, dict] = {}
+            load: dict[str, dict] = {}
             for label in list(trees)[:: -1 if p % 2 else 1]:
+                before = read_load()
                 res[label] = _run_cell(trees[label], sf_dir, names, reps, cpus)
+                load[label] = load_delta(before, read_load())
                 for q, v in res[label].items():
                     mins[label][q] = min(mins[label].get(q, v), v)
             results.append(res)
+            loads.append(load)
     finally:
         for tree in trees.values():
             if tree != REPO:
@@ -302,7 +344,7 @@ def interleaved(
                     ["git", "worktree", "remove", "--force", tree],
                     cwd=REPO, capture_output=True, timeout=60,
                 )
-    return {"passes": results, "min": mins}
+    return {"passes": results, "load": loads, "min": mins}
 
 
 def previous_round() -> tuple[str, int] | None:
@@ -414,17 +456,21 @@ def canary_block(sf_dir: str, cpus: str, reps: int = 3) -> dict:
         if prev is None:
             return {"err": "no previous-round commit distinct from HEAD"}
         sha, rnd = prev
-        mins = interleaved(
+        out = interleaved(
             {"prev": sha, "head": None}, sf_dir, CANARY_QUERIES, reps, cpus
-        )["min"]
+        )
         return {
             "ref": sha[:9],
             "round": rnd,
             "reps": reps,
             "passes": 2,
             "interleaved": True,
-            "prev": mins["prev"],
-            "head": mins["head"],
+            "prev": out["min"]["prev"],
+            "head": out["min"]["head"],
+            # per pass and tree: the cell's timings and the host load
+            # while it ran
+            "per_pass": out["passes"],
+            "load": out["load"],
         }
     except Exception as exc:  # noqa: BLE001 - canary must never sink the bench
         return {"err": f"{type(exc).__name__}: {exc}"[:300]}

@@ -35,14 +35,6 @@ def haversine_km(
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def haversine_feet(
-    lat1: Column, lon1: Column, lat2: Column, lon2: Column
-) -> Column:
-    """Distance in feet (reference ``calculate_distance_in_feet``,
-    notebooks/citibike_ck.ipynb:127-140)."""
-    return haversine_km(lat1, lon1, lat2, lon2) * F.lit(3280.839895013123)
-
-
 # --- exact-geodesic parity path (SURVEY.md §2.8 F17; VERDICT r1 #5) -------
 #
 # The reference's distances come from geopy's geodesic (Karney) on the

@@ -142,11 +142,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
 
 
-def lang_score(text: Column | str, lang: str) -> Column:
-    """Stopword-hit count for one language's marker list."""
-    return stopword_hits(text, LANG_MARKERS[lang])
-
-
 def lang_id_tokens(toks: Column) -> Column:
     """Heuristic language ID over a PROJECTED token-array column: argmax
     of marker-list hit counts. Ties break by the fixed ordering of

@@ -1,9 +1,10 @@
 """Deduplication operators for large-scale text corpora (SURVEY.md §7 stage 7).
 
-Four tiers, all pure DataFrame composition:
+Three tiers, all pure DataFrame composition:
 
-- **exact**: content-hash groupBy — one shuffle on the hash key.
-- **bag fingerprint**: order/multiplicity-insensitive exact dedup.
+- **exact**: content-hash groupBy — one shuffle on the hash key (q35
+  groups on ``functions.text.bag_fingerprint`` the same way for an
+  order/multiplicity-insensitive key).
 - **n-gram Jaccard**: exact near-dup via shingle inverted index — the
   self-join is on the *shingle* key, so work is proportional to shared
   shingles, not to |docs|².
@@ -19,7 +20,6 @@ from pyspark.sql import functions as F
 
 from citibike_analysis_spark.cache import reuse
 from citibike_analysis_spark.functions.text import (
-    bag_fingerprint,
     kgram_hashes_of,
     shingles_of,
     tokens,
@@ -35,17 +35,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     return (
         df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.min(id_col).cast("long").alias("canonical_id"),
-            F.count("*").alias("dup_count"),
-        )
-    )
-
-
-def fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup on the sorted-distinct token bag (reorder-insensitive)."""
-    return (
-        df.groupBy(bag_fingerprint(F.col(text_col)).alias("fingerprint"))
         .agg(
             F.min(id_col).cast("long").alias("canonical_id"),
             F.count("*").alias("dup_count"),

@@ -7,25 +7,38 @@ one of {A,B,C}). The reference's adjacency output
 (notebooks/CitiBike-1.ipynb:222-245) stops at 1-hop neighbor lists; this
 operator is the closure step a 100 TB corpus needs.
 
-Algorithm: iterative min-label propagation, fully declarative per round —
+Algorithm: iterative min-label propagation with pointer jumping and
+hooking, fully declarative per round. Every vertex v holds a label
+L(v), a vertex id of its own component, starting at v. Each round v
+takes the minimum of
 
-1. every vertex starts labeled with its own id;
-2. each round, every edge pushes its endpoint's current label to the
-   other endpoint; a vertex keeps the minimum label seen
-   (join + groupBy-min = the whole round);
-3. converged when no label changed.
+1. its own label and its neighbours' labels (plain propagation);
+2. L(L(v)), the label of its label — pointer jumping, as in hash-to-min
+   (Rastogi et al., "Finding Connected Components in Map-Reduce in
+   Logarithmic Rounds", ICDE 2013);
+3. for every u whose label fell last round from v to L(u), that new
+   label — hooking: the old root v learns what its members learned, as
+   in Shiloach-Vishkin, so a smaller label reaches a whole basin two
+   rounds after it reaches one member.
 
-Rounds needed = component diameter. Dedup graphs are dense blobs with
-tiny diameters (near-dup similarity is nearly transitive), so 2-4 rounds
-is typical; ``max_iter`` guards adversarial chains. Each round is 2
-shuffles on the edge/vertex keys; ``localCheckpoint`` truncates the
-lineage so round N's plan doesn't embed rounds 1..N-1 (without it the
-plan doubles per round and the driver OOMs long before the data does).
-For graphs with huge diameters (not the dedup shape), the alternating
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SoCC'14) converges in O(log n) rounds — same
-declarative building blocks, implemented below as
-:func:`connected_components_star`.
+All three are messages along edges, so a round is one join and one
+groupBy-min: the edge list, the pointer edges (L(v), v) and the hook
+edges (u, old L(u)) joined to the labels on the sender. Each label row
+carries the label it replaced, which names its hook edge. Round 1 needs
+no join at all: every label is still the vertex id, so it is a groupBy
+of the edge list.
+
+Labels only decrease and stay inside the component, so the fixpoint is
+"component = min vertex id". Plain propagation needs diameter rounds.
+Counted on a Python model of the round: with (2) alone a path with
+randomly ordered ids still needed ~1,200 rounds at 4,096 vertices,
+because a local minimum learns a smaller label only hop by hop; with
+(3) that path takes ~23 rounds, and such paths of 256-65,536 vertices
+take about 2·log₂ n (14 for a 4,096-path with ordered ids). Dedup graphs are dense blobs
+with tiny diameters (near-dup similarity is nearly transitive), so 2-4
+rounds is typical. ``localCheckpoint`` truncates the lineage so round
+N's plan doesn't embed rounds 1..N-1 (without it the plan doubles per
+round and the driver OOMs long before the data does).
 """
 
 from __future__ import annotations
@@ -42,6 +55,9 @@ def connected_components(
 ) -> DataFrame:
     """(src, dst) undirected edge list → (id, component) with component =
     min vertex id in the connected component. Deterministic.
+
+    ``max_iter`` bounds the rounds that change labels (one more confirms
+    the fixpoint); a graph that needs more raises ``RuntimeError``.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Symmetrize with ONE reference to the edge plan, not a self-union
@@ -70,19 +86,16 @@ def connected_components(
     )
     sym = sym.localCheckpoint(eager=False)
 
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-    )
     # Convergence detector: one cheap aggregate on the freshly
     # checkpointed result — (count, xor of per-row hashes) is a set
-    # signature of the (id → component) map, equal iff no label changed
-    # (labels only ever decrease, so no ABA). NOT sum(component): under
-    # ANSI mode (the default) sum overflows long for hash-derived vertex
-    # ids (xxhash64 values ~9e18 — the natural id scheme for the dedup
-    # pairs this operator closes) and throws on the second vertex; the
-    # star variant always used the xor form for this reason (r04 review).
+    # signature of the (vertex → component) map, equal iff no label changed
+    # (labels only ever decrease, so no ABA). A round whose labels equal
+    # its input's is a fixpoint: the next round's messages are a subset
+    # of this one's (no hooks once prev == component). NOT
+    # sum(component): under ANSI mode (the default) sum overflows long
+    # for hash-derived vertex ids (xxhash64 values ~9e18 — the natural id
+    # scheme for the dedup pairs this operator closes) and throws on the
+    # second vertex (r04 review).
     # Block hygiene: once round N's checkpoint is materialized (by that
     # same aggregate), round N-1's blocks are garbage — free them NOW so
     # peak storage is one label table, not one per round (at corpus
@@ -91,34 +104,68 @@ def connected_components(
     # cache.track for scope-level release, like the operator persists.
     from citibike_analysis_spark.cache import free_checkpoint, track
 
+    # Label rows are (a, component, prev): vertex a, its label L, and
+    # the label P it held before the last round. The round's columns are
+    # unresolved names, so they are built once and reused: each PySpark
+    # column call is a py4j round trip with call-site capture (~2 ms).
+    # Round 1 needs no join: every label is still the vertex id, so each
+    # message is its sender's id and L = min(a, min neighbour).
+    first_round = [
+        F.least(F.min("b"), F.col("a")).alias("component"),
+        F.col("a").alias("prev"),
+    ]
+    # Later rounds, per label row: the pointer edge (L, a), whose message
+    # L(L) <= L is also a's own-label floor; it carries own = L, which
+    # the round keeps as the next P. And, if the label fell last round,
+    # the hook edge (a, P): P receives L.
+    null_id = F.lit(None).cast(sym.schema["a"].dataType)
+    sent = sym.withColumn("own", null_id)
+    pointer_and_hook = F.explode(
+        F.array(
+            F.struct(
+                F.col("component").alias("a"),
+                F.col("a").alias("b"),
+                F.col("component").alias("own"),
+            ),
+            F.when(
+                F.col("prev") != F.col("component"),
+                F.struct(
+                    F.col("a"), F.col("prev").alias("b"), null_id.alias("own")
+                ),
+            ),
+        )
+    ).alias("_e")
+    is_edge = F.col("_e").isNotNull()
+    receiver = F.col("b").alias("a")
+    new_label = [F.min("component").alias("component"), F.max("own").alias("prev")]
+    signature = [F.count("*"), F.bit_xor(F.xxhash64("a", "component"))]
+
+    labels = None
     prev_sig = None
-    prev_frame = None
     converged = False
     # max_iter + 1: labels stabilizing on round max_iter can only be
-    # CONFIRMED by the signature check one round later, so without the
-    # extra round a component whose propagation depth equals max_iter
-    # raised "diameter > max_iter" despite fully correct labels (review
-    # finding — the budget bounds propagation rounds; the confirmation
-    # round is bookkeeping)
+    # CONFIRMED by the signature check one round later (review finding —
+    # the budget bounds label-changing rounds; the confirmation round is
+    # bookkeeping)
     for _ in range(max_iter + 1):
-        msgs = sym.join(
-            labels, sym["a"] == labels["id"]
-        ).select(F.col("b").alias("id"), "component")
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)  # the agg below materializes it —
-            # one job per round instead of checkpoint-job + agg-job
-        )
-        sig = tuple(
-            new_labels.agg(
-                F.count("*"), F.bit_xor(F.xxhash64("id", "component"))
-            ).collect()[0]
-        )
-        if prev_frame is not None:
-            free_checkpoint(prev_frame)
-        labels, prev_frame = new_labels, new_labels
+        if labels is None:
+            step = sym.groupBy("a").agg(*first_round)
+        else:
+            step = (
+                sent.unionByName(
+                    labels.select(pointer_and_hook).filter(is_edge).select("_e.*")
+                )
+                .join(labels, "a")
+                .groupBy(receiver)
+                .agg(*new_label)
+            )
+        # the agg below materializes the checkpoint — one job per round
+        # instead of checkpoint-job + agg-job
+        new_labels = step.localCheckpoint(eager=False)
+        sig = tuple(new_labels.agg(*signature).collect()[0])
+        if labels is not None:
+            free_checkpoint(labels)
+        labels = new_labels
         if sig == prev_sig:
             converged = True
             break
@@ -127,144 +174,15 @@ def connected_components(
     free_checkpoint(sym)
     track(labels)
     if not converged:
-        # Partially-propagated labels are silently WRONG (a chain longer
-        # than max_iter+1 keeps distinct labels inside one component), and
-        # callers like dedup_clusters would canonicalize against them.
-        # Message states the ACTUAL budget (review finding): the loop ran
-        # max_iter+1 propagation rounds (the confirmation round also
-        # propagates), so labels here are unconfirmed — complete only in
-        # the knife-edge case diameter == max_iter+1, where the last
-        # round finished propagation but no round remained to confirm it.
+        # Unconverged labels are silently WRONG (one component keeps
+        # several labels), and callers like dedup_clusters would
+        # canonicalize against them.
         raise RuntimeError(
             "connected_components could not confirm convergence within "
-            f"{max_iter + 1} propagation rounds (max_iter={max_iter} + 1 "
-            "confirmation round, which also propagates); labels are "
-            "guaranteed complete only for diameter <= max_iter — raise "
-            "max_iter or use connected_components_star (O(log n) rounds)"
+            f"{max_iter + 1} rounds (max_iter={max_iter} + 1 confirmation "
+            "round); raise max_iter"
         )
-    return labels
-
-
-def _large_star(sym: DataFrame) -> DataFrame:
-    """One large-star round over a SYMMETRIC edge list (a, b).
-
-    Per vertex u: m = min(N(u) ∪ {u}); every strictly-larger neighbor
-    v > u re-attaches to m. Emitted edges are (v, m) with m < v.
-    """
-    mins = sym.groupBy("a").agg(F.min("b").alias("_mn"))
-    return (
-        sym.join(mins, "a")
-        .withColumn("_m", F.least(F.col("_mn"), F.col("a")))
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """One small-star round: orient every edge toward its larger endpoint,
-    then per vertex u attach all smaller neighbors (and u itself) to
-    m = min(N(u) ∪ {u}). Output edges are (v, m) with m < v."""
-    oriented = (
-        e.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    mins = oriented.groupBy("a").agg(F.min("b").alias("_mn"))
-    joined = oriented.join(mins, "a")
-    return (
-        joined.filter(F.col("b") != F.col("_mn"))
-        .select(F.col("b").alias("a"), F.col("_mn").alias("b"))
-        .unionByName(mins.select("a", F.col("_mn").alias("b")))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(src, dst) edge list → (id, component): alternating large-star /
-    small-star connected components (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC'14 — public algorithm).
-
-    Converges in O(log n) full rounds regardless of component diameter —
-    the escalation path from :func:`connected_components` (min-label
-    propagation, O(diameter) rounds) for chain-shaped graphs. Same
-    declarative building blocks: each half-round is a groupBy-min plus an
-    equi-join on the vertex key; ``localCheckpoint`` truncates per-round
-    lineage. Convergence detector: the edge-set signature
-    (count + XOR of per-edge hashes — NOT sum, which overflows long
-    under ANSI mode for xxhash64-scale ids) is compared across rounds —
-    one cheap aggregate, no join-against-previous.
-
-    Output matches :func:`connected_components` exactly (component = min
-    vertex id; vertices = every endpoint of the input edge list);
-    property-tested equal on random graphs.
-    """
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # vertex universe from the RAW list (a pure self-loop still registers
-    # its vertex, as in connected_components); stars only need real edges
-    verts = (
-        raw.select("a").unionByName(raw.select(F.col("b").alias("a")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        raw.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    # same per-round block hygiene as connected_components: freeing
-    # round N-1's checkpoint once round N materializes keeps peak
-    # storage at one edge table; the final round's checkpoint (and the
-    # vertex universe, which the returned plan left-joins) stay live,
-    # registered for scope-level release.
-    from citibike_analysis_spark.cache import free_checkpoint, track
-
-    prev_sig = None
-    prev_frame = e  # the input checkpoint: garbage once round 0 lands
-    converged = False
-    # max_iter + 1 for the same reason as connected_components: the
-    # signature can only confirm round-max_iter stabilization one round
-    # later (review finding)
-    for _ in range(max_iter + 1):
-        sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        e = _small_star(_large_star(sym)).localCheckpoint(eager=False)
-        # xor of per-edge hashes: order-insensitive and overflow-free
-        # under ANSI mode (edges are distinct, so xor is a set signature)
-        sig = tuple(
-            e.agg(F.count("*"), F.bit_xor(F.xxhash64("a", "b"))).collect()[0]
-        )
-        if prev_frame is not None:
-            free_checkpoint(prev_frame)
-        prev_frame = e
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    track(e)
-    track(verts)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds (expected O(log n)); raise max_iter"
-        )
-    # at the fixpoint the edge set is a union of stars (v, center):
-    # attach every non-center vertex to its center, centers to themselves
-    comp = e.groupBy("a").agg(F.min("b").alias("component"))
-    return (
-        verts.join(comp, verts["a"] == comp["a"], "left")
-        .select(
-            verts["a"].alias("id"),
-            F.coalesce("component", verts["a"]).alias("component"),
-        )
-    )
+    return labels.select(F.col("a").alias("id"), "component")
 
 
 def dedup_clusters(
@@ -273,25 +191,16 @@ def dedup_clusters(
     pairs: DataFrame,
     pair_a: str = "id_a",
     pair_b: str = "id_b",
-    algorithm: str = "label_prop",
 ) -> DataFrame:
     """Assign every document its canonical id (min id in its near-dup
     cluster; singletons are their own canonical) and the cluster size.
 
     This is the "keep one copy" step of corpus dedup: filter
-    ``id == canonical_id`` downstream to retain canonicals only.
-
-    ``algorithm``: ``"label_prop"`` (default — O(diameter) rounds, ideal
-    for the dense tiny-diameter blobs near-dup graphs form) or ``"star"``
-    (:func:`connected_components_star`, O(log n) rounds — the safe choice
-    when the pair graph might contain long chains).
+    ``id == canonical_id`` downstream to retain canonicals only. The
+    clusters come from :func:`connected_components`, whose rounds grow
+    with log n, so a pair graph with long chains closes too.
     """
-    if algorithm == "label_prop":
-        cc = connected_components(pairs, pair_a, pair_b)
-    elif algorithm == "star":
-        cc = connected_components_star(pairs, pair_a, pair_b)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    cc = connected_components(pairs, pair_a, pair_b)
     # alias the CC output before joining: a caller whose id_col is
     # literally "id" would otherwise hit AMBIGUOUS_REFERENCE on the
     # post-join select (r04 review)

@@ -32,25 +32,3 @@ def interval_rollup(
         .withColumn("bucket_ts", F.col("_w.start"))
         .drop("_w")
     )
-
-
-def bucket_epoch_secs(ts_ns: Column, interval_secs: int) -> Column:
-    """Bucket start as epoch seconds (LONG) from an int64-nanosecond
-    column.
-
-    Integer-exact alternative to ``window()`` when the source keeps raw
-    nanoseconds (events ingest): shuffles an 8-byte long instead of a
-    window struct and avoids timestamp semantics entirely. All-integer
-    math (r04 review): the old ``truncated_ns / 1e9`` form produced a
-    DOUBLE whose ~1e18 numerator exceeds 2^53, so the "integer-exact"
-    claim was false by up to 256 ns of rounding — and ``%`` (remainder)
-    rounded pre-1970 timestamps toward zero into the wrong bucket;
-    ``pmod`` gives floor semantics for negatives.
-    """
-    ns_per = F.lit(int(interval_secs) * 1_000_000_000)
-    truncated = (ts_ns - F.pmod(ts_ns, ns_per)).cast("long")
-    # exact long division: `truncated` is an exact multiple of 1e9, and
-    # decimal division keeps it integer-precise where double cannot
-    return (
-        truncated.cast("decimal(38,0)") / F.lit(1_000_000_000)
-    ).cast("long")

@@ -285,15 +285,6 @@ def _planes_matrix(bits: int, tables: int, dim: int, seed: int):
     )
 
 
-def _auto_bits(corpus: DataFrame, id_col: str) -> int:
-    """Corpus-sized sign-LSH banding: ``bits = clamp(ceil(log2(n/8)),
-    4, 24)`` from one column-pruned count — per-bucket occupancy stays
-    ~8, so within-bucket candidates grow linearly with corpus size (the
-    contract near_duplicate_embeddings and incremental_embedding_dedup
-    both document and the scale rehearsal measures)."""
-    return _bits_for_n(corpus.select(id_col).count())
-
-
 def _bits_for_n(n: int) -> int:
     import math
 

@@ -143,40 +143,6 @@ def clean_weather(availability: DataFrame, weather_fix: DataFrame) -> DataFrame:
     return merged.dropDuplicates()
 
 
-def clean_weather_single_pass(availability: DataFrame, weather_fix: DataFrame) -> DataFrame:
-    """Idiomatic single-pass rewrite of :func:`clean_weather` (SURVEY.md §4):
-    one left join + per-column ``coalesce`` patch — no split, no union, no
-    dedup shuffle. Same result when patch rows exist for every needs-fix
-    key (the reference's own precondition); at scale this halves the
-    fact-table passes.
-    """
-    with_hour = availability.withColumn("time_hour", trunc_hour(F.col("time_interval")))
-    fix = F.broadcast(
-        weather_fix.select(
-            "time_hour", "zip", *[F.col(c).alias(f"_fix_{c}") for c in WEATHER_COLS]
-        )
-    )
-    out = with_hour.join(fix, ["time_hour", "zip"], "left")
-    # materialize the predicate BEFORE the patch loop: it reads
-    # weather_status, which the loop itself replaces — evaluating it
-    # lazily per column is only correct while weather_status happens to
-    # sort last in WEATHER_COLS (reordering that shared constant would
-    # silently leave later columns unpatched — r04 review)
-    out = out.withColumn(
-        "__needs_fix",
-        F.col("weather_status").isNull()
-        | (F.col("weather_status") == "predicted"),
-    )
-    for c in WEATHER_COLS:
-        out = out.withColumn(
-            c,
-            F.when(F.col("__needs_fix"), F.col(f"_fix_{c}")).otherwise(F.col(c)),
-        )
-    return out.drop(
-        "__needs_fix", *[f"_fix_{c}" for c in WEATHER_COLS]
-    ).dropDuplicates()
-
-
 def build_refetch_keys(availability: DataFrame) -> DataFrame:
     """§3.2 prelude (README.md:493-586): the (zip, day, lat, long) re-fetch
     key list.

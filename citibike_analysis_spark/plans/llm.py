@@ -2009,10 +2009,9 @@ WHERE c / (na.n + nb.n - c) >= 0.5
 
 
 # --------------------------------------------------------------------------
-# q62 — dedup clustering via large-star/small-star connected components
-# (Kiveris et al. SoCC'14): identical output contract to q46 (same
-# recursive-CTE oracle), different engine — O(log n) rounds instead of
-# O(diameter), the safe form when the pair graph may contain chains.
+# q62 — dedup clustering over the df-capped Jaccard pairs, kept under its
+# registered name: same output contract and recursive-CTE oracle as q46,
+# and the same shared graph.connected_components operator.
 # --------------------------------------------------------------------------
 
 def q62_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2022,7 +2021,7 @@ def q62_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, max_doc_freq=_Q61_MAX_DF
     )
-    return dedup_clusters(d, "doc_id", pairs, algorithm="star").select(
+    return dedup_clusters(d, "doc_id", pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("canonical_id").cast("long").alias("canonical_id"),
         F.col("cluster_size").cast("long").alias("cluster_size"),

@@ -71,10 +71,15 @@ def main() -> int:
     # caught systematically rather than by luck); default stays the
     # driver-like local[8] vanilla session.
     master = os.environ.get("SWEEP_MASTER", "local[8]")
+    from citibike_analysis_spark.session import CODEGEN_CACHE_ENTRIES
+
+    # the engine's generated-class cache size (session.py says why): a
+    # static conf, so it goes on the builder, which rebuild_session reuses
     b = (
         SparkSession.builder.master(master)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master.startswith("local-cluster"):
         b = b.config(

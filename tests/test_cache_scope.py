@@ -78,7 +78,8 @@ def test_nested_scopes_release_only_their_own(spark):
 def test_connected_components_releases_checkpoints(spark):
     # graph.py's per-round localCheckpoints: rounds N-1 are freed inside
     # the loop; the final round's blocks (which back the returned plan)
-    # are released by the scope. Covers both algorithm variants.
+    # are released by the scope. Runs both registered CC queries (q46,
+    # q62), which share the one operator.
     _reset(spark)
     assert _n_persistent(spark) == 0
     _run_scoped(spark, "q46_dedup_clusters")

@@ -3,8 +3,8 @@
 Asserts the reference author's own validation invariants
 (reference README.md:903-994) plus the semantics corners SURVEY.md §5.2.4
 flags: residual-NA = 0, row-count conservation, zip leading zeros,
-semi-join non-duplication, split-union vs single-pass equivalence, and
-the BASELINE.md regression guard (the zip lookup must plan a broadcast
+semi-join non-duplication, union-by-name column-order independence,
+and the BASELINE.md regression guard (the zip lookup must plan a broadcast
 hash join, never a correlated scan).
 """
 
@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from citibike_analysis_spark.plans.citibike import (
     build_refetch_keys,
     clean_weather,
-    clean_weather_single_pass,
     interesting_stations_sql,
     repair_zip,
 )
@@ -76,12 +75,6 @@ class TestCleaningPipeline:
     def test_row_count_conserved(self, spark, avail, fix):
         out = clean_weather(avail, fix)
         assert out.count() == avail.count()  # reference README.md:910-994
-
-    def test_split_union_equals_single_pass(self, spark, avail, fix):
-        a = clean_weather(avail, fix)
-        b = clean_weather_single_pass(avail, fix).select(*a.columns)
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
 
     def test_union_by_name_column_order_independent(self, spark, avail, fix):
         # J6 corner (SURVEY.md §5.2.4): pandas concat aligns by name;

@@ -2,12 +2,17 @@
 
 Pins: multi-hop chains close transitively, separate components stay
 separate, singletons are their own canonical, cluster sizes count every
-member, and convergence happens within max_iter on a path graph (the
-worst diameter case for label propagation).
+member, labels equal a union-find reference on random graphs, and paths
+of 4,096 vertices converge in about log2(n) rounds whatever the order
+of their ids.
 """
 
 from __future__ import annotations
 
+import math
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from citibike_analysis_spark.operators.graph import (
@@ -54,58 +59,96 @@ def test_dedup_clusters_with_singletons(spark):
     assert kept == 4
 
 
-def test_nonconvergence_raises_instead_of_silent_wrong_labels(spark):
-    # ADVICE r1: a chain with diameter > max_iter used to return
-    # partially-propagated labels silently; it must raise now
-    import pytest
+def _path(order):
+    return [(order[i], order[i + 1]) for i in range(len(order) - 1)]
 
-    edges = [(i, i + 1) for i in range(12)]
-    df = spark.createDataFrame(edges, "src long, dst long")
+
+_N_PATH = 4096
+_PATHS = {
+    "ascending": list(range(_N_PATH)),
+    "descending": list(range(_N_PATH))[::-1],
+    # 0, n-1, 1, n-2, ...: every other vertex is a local minimum
+    "zigzag": [v for i in range(_N_PATH // 2) for v in (i, _N_PATH - 1 - i)],
+}
+
+
+def test_nonconvergence_raises_instead_of_silent_wrong_labels(spark):
+    # ADVICE r1: unconverged labels used to come back silently; they
+    # must raise. A 4,096-path needs ~14 rounds, so 3 + 1 cannot do it.
+    df = spark.createDataFrame(_path(_PATHS["ascending"]), "src long, dst long")
     with pytest.raises(RuntimeError, match="could not confirm convergence"):
         connected_components(df, max_iter=3)
 
 
-def _cc_star(spark, edges, **kw):
-    from citibike_analysis_spark.operators.graph import connected_components_star
+@pytest.mark.parametrize("order", sorted(_PATHS))
+def test_path_converges_in_log_rounds(spark, order):
+    # diameter 4,095: plain label propagation needs ~4,096 rounds; with
+    # pointer jumping and hooking the budget is ceil(log2 n) + 2
+    got = _cc(
+        spark,
+        _path(_PATHS[order]),
+        max_iter=math.ceil(math.log2(_N_PATH)) + 2,
+    )
+    assert got == {v: 0 for v in range(_N_PATH)}
 
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components_star(df, **kw)
-    return {r["id"]: r["component"] for r in out.collect()}
+
+def _union_find(edges):
+    """Reference labels: union by smaller root, so each root is its
+    component's min id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
 
 
-def test_star_matches_label_propagation_on_random_graphs(spark):
-    import random
-
+def _random_graphs():
     rng = random.Random(7)
-    for trial in range(3):
-        n = 40
-        edges = [
-            (rng.randrange(n), rng.randrange(n))
-            for _ in range(rng.randrange(10, 45))
-        ]
-        edges = [e for e in edges if e[0] != e[1]]
-        if not edges:
-            continue
-        assert _cc_star(spark, edges) == _cc(spark, edges)
+    graphs = []
+    for _ in range(8):  # sparse random graphs, self-loops kept
+        graphs.append(
+            [(rng.randrange(40), rng.randrange(40)) for _ in range(rng.randrange(10, 45))]
+        )
+    for _ in range(8):  # random trees made of long paths, shuffled ids
+        ids = list(range(150))
+        rng.shuffle(ids)
+        graphs.append(
+            [(ids[i], ids[i - 1 - rng.randrange(min(i, 3))]) for i in range(1, 150)]
+        )
+    for _ in range(4):  # paths with shuffled ids: local minima everywhere
+        ids = list(range(100))
+        rng.shuffle(ids)
+        graphs.append(_path(ids))
+    for _ in range(4):  # xxhash64-scale ids of both signs, one self-loop
+        ids = [rng.randrange(-(2**63), 2**63) for _ in range(60)]
+        graphs.append(
+            [(ids[rng.randrange(60)], ids[rng.randrange(60)]) for _ in range(50)]
+            + [(ids[0], ids[0])]
+        )
+    # a pure self-loop still registers its vertex as its own component
+    graphs.append([(1, 2), (10, 11), (11, 12), (5, 5)])
+    return graphs
 
 
-def test_star_converges_in_olog_rounds_on_a_chain(spark):
-    # path graph 0-..-64: diameter 64. Label propagation needs ~64 rounds
-    # (raises at 12); large-star/small-star finishes within ~log2(n)+slack.
-    import pytest
-
-    edges = [(i, i + 1) for i in range(64)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    with pytest.raises(RuntimeError):
-        connected_components(df, max_iter=12)
-    got = _cc_star(spark, edges, max_iter=12)
-    assert got == {i: 0 for i in range(65)}
-
-
-def test_star_components_and_singletons(spark):
-    got = _cc_star(spark, [(1, 2), (10, 11), (11, 12), (5, 5)])
-    # self-loop 5-5 still registers vertex 5 as its own component
-    assert got == {1: 1, 2: 1, 10: 10, 11: 10, 12: 10, 5: 5}
+def test_matches_union_find_on_random_graphs(spark):
+    # one Spark call over the disjoint union: small ids are shifted
+    # apart per graph, so no two graphs share a vertex
+    graphs = _random_graphs()
+    assert len(graphs) >= 20
+    edges = [
+        (a, b) if abs(a) >= 2**32 else (a + k * 10_000, b + k * 10_000)
+        for k, g in enumerate(graphs)
+        for a, b in g
+    ]
+    assert _cc(spark, edges) == _union_find(edges)
 
 
 def test_depth_equals_max_iter_converges(spark):

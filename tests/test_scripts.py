@@ -94,3 +94,27 @@ def test_timed_runs_starts_every_rep_with_no_persisted_rdd(spark):
     assert at_start == [0, 0, 0]
     # the probe is live: the query itself leaves blocks behind
     assert min(after_build) > 0
+
+
+def test_read_load_parses_steal_and_load_delta_spans_a_cell(tmp_path):
+    """The canary's per-cell load record: steal comes from the 8th value
+    of /proc/stat's ``cpu`` line, in CPU-seconds; the delta spans the
+    cell. No Spark."""
+    import bench
+
+    hz = os.sysconf("SC_CLK_TCK")
+    stat = tmp_path / "stat"
+    stat.write_text(f"cpu  10 0 20 300 4 0 1 {7 * hz} 0 0\ncpu0 1 2 3\n")
+    start = bench.read_load(str(stat))
+    assert start["steal_s"] == 7.0
+    assert isinstance(start["load1"], float) and start["load1"] >= 0
+    stat.write_text(f"cpu  10 0 20 300 4 0 1 {9 * hz + hz // 2} 0 0\n")
+    rec = bench.load_delta(start, bench.read_load(str(stat)))
+    assert rec["steal_s"] == 2.5
+    assert len(rec["load1"]) == 2 and None not in rec["load1"]
+    # an unreadable stat file drops steal but keeps the loadavg
+    missing = bench.read_load(str(tmp_path / "absent"))
+    assert "steal_s" not in missing and "load1" in missing
+    assert "steal_s" not in bench.load_delta(missing, start)
+    # the host's own file parses too
+    assert bench.read_load()["steal_s"] >= 0
