@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from citibike_analysis_spark.cache import reuse
+from citibike_analysis_spark.cache import free_checkpoint, reuse
 from citibike_analysis_spark.functions.text import (
     kgram_hashes_of,
     shingles_of,
@@ -1349,16 +1349,20 @@ def append_to_gram_index(
     novel = batch.join(
         spark.table(table).select("h"), "h", "left_anti"
     ).localCheckpoint(eager=True)
-    n = novel.count()
-    if n:
-        # bucket spec read back from the catalog so a mismatch is
-        # impossible by construction
-        num_buckets = int(
-            spark.sql(f"DESCRIBE EXTENDED {table}")
-            .filter(F.col("col_name") == "Num Buckets")
-            .collect()[0]["data_type"]
-        )
-        append_bucketed(novel, table, ["h"], num_buckets)
+    try:
+        n = novel.count()
+        if n:
+            # bucket spec read back from the catalog so a mismatch is
+            # impossible by construction
+            num_buckets = int(
+                spark.sql(f"DESCRIBE EXTENDED {table}")
+                .filter(F.col("col_name") == "Num Buckets")
+                .collect()[0]["data_type"]
+            )
+            append_bucketed(novel, table, ["h"], num_buckets)
+    finally:
+        # the append has landed (or failed): the blocks are garbage
+        free_checkpoint(novel)
     return n
 
 

@@ -59,6 +59,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from citibike_analysis_spark.cache import free_checkpoint
 from citibike_analysis_spark.operators.similarity import as_double, norm
 
 
@@ -794,44 +795,48 @@ def refresh_pq_codes(spark, table: str, num_buckets: int = 16) -> int:
         "neighbor_id",
         "left_anti",
     ).localCheckpoint(eager=True)
-    n = missing.count()
-    if n == 0:
-        return 0
-    coded = pq_encode(
-        missing.withColumnRenamed("cid", "_list_cid"),
-        books,
-        id_col="neighbor_id",
-        vec_col="_cv",
-        carry_cols=["_list_cid"],
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_list_cid").alias("cid"),
-        "codes",
-        "recon_norm",
-    )
-    ct = f"{table}__codes"
-    cp = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {ct}").collect()
-    }
-    had_ncodes = _IVFPQ_NCODES_PROP in cp
-    if had_ncodes:
-        # UNSET before the data append, re-SET after (r13 ADVICE): a
-        # crash in between leaves the property absent → count fallback
-        # → self-healing, instead of a permanently stale-low value
-        # refresh itself can never clear (0 missing ids)
-        spark.sql(
-            f"ALTER TABLE {ct} UNSET TBLPROPERTIES ('{_IVFPQ_NCODES_PROP}')"
+    try:
+        n = missing.count()
+        if n == 0:
+            return 0
+        coded = pq_encode(
+            missing.withColumnRenamed("cid", "_list_cid"),
+            books,
+            id_col="neighbor_id",
+            vec_col="_cv",
+            carry_cols=["_list_cid"],
+        ).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("_list_cid").alias("cid"),
+            "codes",
+            "recon_norm",
         )
-    append_bucketed(coded, ct, ["cid"], num_buckets)
-    if had_ncodes:
-        # maintain the count cache: append-committed + the missing-row
-        # count already in hand, no count job (r12 ADVICE)
-        spark.sql(
-            f"ALTER TABLE {ct} SET TBLPROPERTIES ('{_IVFPQ_NCODES_PROP}' = "
-            f"'{int(cp[_IVFPQ_NCODES_PROP]) + n}')"
-        )
-    return n
+        ct = f"{table}__codes"
+        cp = {
+            r["key"]: r["value"]
+            for r in spark.sql(f"SHOW TBLPROPERTIES {ct}").collect()
+        }
+        had_ncodes = _IVFPQ_NCODES_PROP in cp
+        if had_ncodes:
+            # UNSET before the data append, re-SET after (r13 ADVICE): a
+            # crash in between leaves the property absent → count fallback
+            # → self-healing, instead of a permanently stale-low value
+            # refresh itself can never clear (0 missing ids)
+            spark.sql(
+                f"ALTER TABLE {ct} UNSET TBLPROPERTIES ('{_IVFPQ_NCODES_PROP}')"
+            )
+        append_bucketed(coded, ct, ["cid"], num_buckets)
+        if had_ncodes:
+            # maintain the count cache: append-committed + the missing-row
+            # count already in hand, no count job (r12 ADVICE)
+            spark.sql(
+                f"ALTER TABLE {ct} SET TBLPROPERTIES ('{_IVFPQ_NCODES_PROP}' = "
+                f"'{int(cp[_IVFPQ_NCODES_PROP]) + n}')"
+            )
+        return n
+    finally:
+        # the codes append has landed (or failed): the blocks are garbage
+        free_checkpoint(missing)
 
 
 def _verify_ivfpq_stamp(spark, table: str, check_counts: bool = True):

@@ -25,7 +25,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from citibike_analysis_spark.cache import _is_single_jvm_master, track
+from citibike_analysis_spark.cache import (
+    _is_single_jvm_master,
+    free_checkpoint,
+    track,
+)
 
 
 def as_double(vec: Column) -> Column:
@@ -855,10 +859,17 @@ def append_to_lsh_index(
             ["neighbor_id", "tbl"],
             "left_anti",
         ).localCheckpoint(eager=True)
-    # __vecs FIRST — see "Crash ordering" above: torn = orphan vectors
-    # (benign, detectable), never vector-less bucket rows (silent loss)
-    append_bucketed(bv, f"{table}__vecs", ["neighbor_id"], num_buckets)
-    append_bucketed(bucketed, table, ["tbl", "bkt"], num_buckets)
+    try:
+        # __vecs FIRST — see "Crash ordering" above: torn = orphan vectors
+        # (benign, detectable), never vector-less bucket rows (silent loss)
+        append_bucketed(bv, f"{table}__vecs", ["neighbor_id"], num_buckets)
+        append_bucketed(bucketed, table, ["tbl", "bkt"], num_buckets)
+    finally:
+        if not assume_novel:
+            # the survivor sets checkpointed above; bv is the caller's
+            # frame under assume_novel and stays untouched
+            free_checkpoint(bv)
+            free_checkpoint(bucketed)
 
 
 def remove_from_lsh_index(

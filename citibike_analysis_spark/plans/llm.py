@@ -1222,9 +1222,13 @@ def q141_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id", "embedding"
             ),
         )
-        ap = ivfpq_topk(
-            spark, table, q, k=5, nprobe=6, shortlist=50
-        ).localCheckpoint(eager=True)
+        from citibike_analysis_spark.cache import track
+
+        ap = track(
+            ivfpq_topk(
+                spark, table, q, k=5, nprobe=6, shortlist=50
+            ).localCheckpoint(eager=True)
+        )
     finally:
         for state in ("", "__cents", "__tombs", "__codes", "__books"):
             spark.sql(f"DROP TABLE IF EXISTS {table}{state}")
@@ -4847,7 +4851,9 @@ def q147_gram_index_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_gram_index(even, t, k=_Q143_K)
         # eager localCheckpoint detaches the result from the catalog
         # table, which the finally below drops before the caller reads
-        return gram_index_coverage(spark, t, odd).localCheckpoint(eager=True)
+        from citibike_analysis_spark.cache import track
+
+        return track(gram_index_coverage(spark, t, odd).localCheckpoint(eager=True))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 

@@ -137,9 +137,12 @@ def fetch_raw(
     keys = keys.withColumn(
         "time_day", F.col("time_day").cast("timestamp_ntz")
     )
+    from citibike_analysis_spark.cache import free_checkpoint, track
+
     keys = keys.localCheckpoint(eager=True)
     n = keys.count()
     if n > max_calls:
+        free_checkpoint(keys)
         raise ValueError(
             f"{n} fetch keys exceed the {max_calls}-call quota; coarsen the "
             "key list first (the reference dedups (zip,hour)->(zip,day), "
@@ -172,9 +175,11 @@ def fetch_raw(
     # mid-backfill exhaustion the count guard exists to prevent (r04
     # review). One fetch pass per fetch_raw call; blocks are reused by
     # all downstream reads and released via cache.release_all/scope.
-    from citibike_analysis_spark.cache import track
-
-    return track(fetched.localCheckpoint(eager=True))
+    # The payload checkpoint no longer reads the keys: free them.
+    try:
+        return track(fetched.localCheckpoint(eager=True))
+    finally:
+        free_checkpoint(keys)
 
 
 def normalize(raw: DataFrame, tz: str = "America/New_York") -> DataFrame:

@@ -79,6 +79,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citibike_analysis_spark.cache import free_checkpoint
+
 
 def start_index_maintenance(
     batches: DataFrame,
@@ -183,20 +185,24 @@ def start_index_maintenance(
             "n_novel": 0,
             "n_codes_refreshed": 0,
         }
-        if not novel.isEmpty():
-            appended = append_to_ivf_index(
-                novel,
-                table,
-                id_col=id_col,
-                vec_col=vec_col,
-                num_buckets=num_buckets,
-            )
-            stats.update(appended)
-            stats["n_novel"] = (
-                int(appended["n_appended"])
-                if appended["n_appended"] is not None
-                else 0
-            )
+        try:
+            if not novel.isEmpty():
+                appended = append_to_ivf_index(
+                    novel,
+                    table,
+                    id_col=id_col,
+                    vec_col=vec_col,
+                    num_buckets=num_buckets,
+                )
+                stats.update(appended)
+                stats["n_novel"] = (
+                    int(appended["n_appended"])
+                    if appended["n_appended"] is not None
+                    else 0
+                )
+        finally:
+            # the append has landed (or failed): the blocks are garbage
+            free_checkpoint(novel)
         # the refresh runs even on the fully-replayed (n_novel == 0)
         # path: a crash BETWEEN the previous delivery's append and its
         # refresh leaves the codes sibling lagging, and the replayed
@@ -308,18 +314,22 @@ def start_lsh_index_maintenance(
                 if on_batch is not None:
                     on_batch(stats)
             return
-        append_to_lsh_index(
-            batch.select(id_col, vec_col).localCheckpoint(eager=True),
-            table,
-            id_col=id_col,
-            vec_col=vec_col,
-            bits=bits,
-            tables=tables,
-            dim=dim,
-            seed=seed,
-            num_buckets=num_buckets,
-            assume_novel=False,
-        )
+        b = batch.select(id_col, vec_col).localCheckpoint(eager=True)
+        try:
+            append_to_lsh_index(
+                b,
+                table,
+                id_col=id_col,
+                vec_col=vec_col,
+                bits=bits,
+                tables=tables,
+                dim=dim,
+                seed=seed,
+                num_buckets=num_buckets,
+                assume_novel=False,
+            )
+        finally:
+            free_checkpoint(b)
         stats: dict = {"epoch_id": int(epoch_id)}
         if on_batch is not None:
             # counted only when someone is listening: the count is a
@@ -402,33 +412,38 @@ def start_span_admission(
             return
         spark = batch.sparkSession
         b = batch.localCheckpoint(eager=True)
-        # the batch's OWN ids are the exclusion set: grams this epoch
-        # crash-landed before an offset commit (including grams SHARED
-        # between two batch docs) score exactly as on first delivery
-        cov = gram_index_coverage(
-            spark, table, b, id_col, text_col,
-            exclude_contributors=b.select(id_col),
-        )
-        admitted = (
-            b.join(
-                cov.filter(F.col("coverage") <= F.lit(max_coverage)).select(
-                    F.col("doc_id").alias("_adm_id")
-                ),
-                b[id_col] == F.col("_adm_id"),
-                "left_semi",
+        try:
+            # the batch's OWN ids are the exclusion set: grams this epoch
+            # crash-landed before an offset commit (including grams SHARED
+            # between two batch docs) score exactly as on first delivery
+            cov = gram_index_coverage(
+                spark, table, b, id_col, text_col,
+                exclude_contributors=b.select(id_col),
             )
-        )
-        sink(admitted, int(epoch_id))
-        n_appended = append_to_gram_index(spark, table, b, id_col, text_col)
-        if on_batch is not None:
-            on_batch(
-                {
-                    "epoch_id": int(epoch_id),
-                    "n_batch_rows": b.count(),
-                    "n_admitted": admitted.count(),
-                    "n_grams_appended": n_appended,
-                }
+            admitted = (
+                b.join(
+                    cov.filter(F.col("coverage") <= F.lit(max_coverage)).select(
+                        F.col("doc_id").alias("_adm_id")
+                    ),
+                    b[id_col] == F.col("_adm_id"),
+                    "left_semi",
+                )
             )
+            sink(admitted, int(epoch_id))
+            n_appended = append_to_gram_index(spark, table, b, id_col, text_col)
+            if on_batch is not None:
+                on_batch(
+                    {
+                        "epoch_id": int(epoch_id),
+                        "n_batch_rows": b.count(),
+                        "n_admitted": admitted.count(),
+                        "n_grams_appended": n_appended,
+                    }
+                )
+        finally:
+            # the sink, like foreachBatch, consumes the batch before
+            # returning: the blocks are garbage
+            free_checkpoint(b)
 
     writer = (
         batches.writeStream.outputMode("append")

@@ -9,6 +9,8 @@ end-to-end inside a ``cache_scope()`` leaves ZERO persistent RDDs behind.
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF0001
 
 
@@ -86,6 +88,57 @@ def test_connected_components_releases_checkpoints(spark):
     assert _n_persistent(spark) == 0
     _run_scoped(spark, "q62_dedup_clusters_star")
     assert _n_persistent(spark) == 0
+
+
+@pytest.mark.parametrize(
+    "qname",
+    [
+        "q141_ivfpq_recall_audit",  # refresh-free IVF-PQ probe result
+        "q142_streaming_index_maintenance_replay",  # IVF sink + PQ refresh
+        "q147_gram_index_coverage",  # returned coverage checkpoint
+    ],
+)
+def test_index_paths_leave_no_untracked_checkpoint(spark, qname):
+    # an eager localCheckpoint nobody tracks or frees keeps its blocks
+    # until the JVM happens to collect the RDD, so a later clearCache +
+    # release_all still saw them (and timed reps started non-empty)
+    _reset(spark)
+    assert _n_persistent(spark) == 0
+    _run_scoped(spark, qname)
+    assert _n_persistent(spark) == 0
+
+
+def test_index_appends_free_their_checkpoints(spark):
+    # the recovery-mode LSH append and the gram append checkpoint their
+    # anti-join survivors; once the rows have landed nothing stays
+    from citibike_analysis_spark.operators.dedup import (
+        append_to_gram_index,
+        build_gram_index,
+    )
+    from citibike_analysis_spark.operators.similarity import (
+        append_to_lsh_index,
+        build_lsh_index,
+    )
+    from citibike_analysis_spark.sources.tables import load_table
+    from pyspark.sql import functions as F
+
+    e = load_table(spark, SF0001, "embeddings")
+    d = load_table(spark, SF0001, "documents")
+    lsh, grams = "cache_scope_lsh_append", "cache_scope_gram_append"
+    params = dict(bits=6, tables=8)
+    try:
+        build_lsh_index(e.filter(F.col("vec_id") % 2 == 0), lsh, **params)
+        build_gram_index(d.filter(F.col("doc_id") % 2 == 0), grams)
+        _reset(spark)
+        assert _n_persistent(spark) == 0
+        append_to_lsh_index(
+            e.filter(F.col("vec_id") % 2 == 1), lsh, assume_novel=False, **params
+        )
+        assert append_to_gram_index(spark, grams, d.filter(F.col("doc_id") % 2 == 1))
+        assert _n_persistent(spark) == 0
+    finally:
+        for t in (lsh, f"{lsh}__vecs", grams):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_nested_empty_scope_does_not_steal_outer_list(spark):

@@ -138,9 +138,18 @@ def _random_graphs():
     return graphs
 
 
-def test_matches_union_find_on_random_graphs(spark):
-    # one Spark call over the disjoint union: small ids are shifted
-    # apart per graph, so no two graphs share a vertex
+def test_star_components_and_singletons(spark):
+    got = _cc(spark, [(1, 2), (10, 11), (11, 12), (5, 5)])
+    # self-loop 5-5 still registers vertex 5 as its own component
+    assert got == {1: 1, 2: 1, 10: 10, 11: 10, 12: 10, 5: 5}
+
+
+def test_star_matches_label_propagation_on_random_graphs(spark):
+    # the name dates from a second (large-star/small-star) operator that
+    # was checked against label propagation; the one operator left is now
+    # checked against a union-find reference. One Spark call over the
+    # disjoint union: small ids are shifted apart per graph, so no two
+    # graphs share a vertex
     graphs = _random_graphs()
     assert len(graphs) >= 20
     edges = [
